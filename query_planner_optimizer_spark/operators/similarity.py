@@ -980,13 +980,20 @@ def _pq_train_books(
     ks: int,
     d_sub: int,
     iters: int,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, int]:
     """Lloyd-train the per-subspace codebooks and return
-    (books_frame, codes): the broadcastable (s, code, c_vec, c_n2)
-    codebook frame and the final corpus assignments (id, s, code).
-    Factored out of :func:`pq_topk` so IVF-PQ composes the exact same
-    training (byte-identical codebooks for identical inputs)."""
+    (books_frame, codes, n_codes): the broadcastable (s, code, c_vec,
+    c_n2) codebook frame, the final corpus assignments (id, s, code)
+    and the codes per subspace actually trained. Factored out of
+    :func:`pq_topk` so IVF-PQ composes the exact same training
+    (byte-identical codebooks for identical inputs)."""
     seeds = unit.orderBy("id").limit(ks).collect()
+    # A corpus smaller than ks seeds only len(seeds) codes: the code
+    # range is bounded by what was seeded (each vector then owns a
+    # code), never by codes that were never trained.
+    ks = len(seeds)
+    if ks == 0:
+        raise ValueError("PQ training needs at least one vector")
     books: dict[tuple[int, int], list[float]] = {}
     for j, r in enumerate(seeds):
         u = list(r["u"])
@@ -1042,7 +1049,7 @@ def _pq_train_books(
         for r in assign().groupBy("s", "code").agg(*dims).collect():
             books[(r["s"], r["code"])] = [r[f"d{i}"] for i in range(d_sub)]
 
-    return book_df(), assign().select("id", "s", "code")
+    return book_df(), assign().select("id", "s", "code"), ks
 
 
 def pq_topk(
@@ -1083,7 +1090,7 @@ def pq_topk(
         F.transform("_vec", lambda x: x / F.col("_norm")).alias("u"),
     ).persist()
     sub = _pq_subvectors(unit, m, d_sub)
-    books, codes = _pq_train_books(spark, unit, sub, m, ks, d_sub, iters)
+    books, codes, _ = _pq_train_books(spark, unit, sub, m, ks, d_sub, iters)
 
     # Per-query LUT: partial ADC distance for every (s, code).
     q_sub = sub.filter(F.col("id") < num_queries).select(
@@ -1267,8 +1274,8 @@ def ivfpq_topk(
     else:
         enc_unit = unit
     sub = _pq_subvectors(enc_unit, m, d_sub)
-    books, codes = _pq_train_books(spark, enc_unit, sub, m, ks, d_sub,
-                                   pq_iters)
+    books, codes, ks = _pq_train_books(spark, enc_unit, sub, m, ks, d_sub,
+                                       pq_iters)
 
     probes = (
         _scored_cells(base.filter(F.col("id") < num_queries), cents)
@@ -1566,7 +1573,7 @@ def build_ivfpq_index(
             f_books = pool.submit(
                 _pq_train_books, spark, unit, sub, m, ks, d_sub, pq_iters)
             cents = f_cents.result()
-            books, codes = f_books.result()
+            books, codes, ks = f_books.result()
         cells = _assigned_cells(base, cents).select("id", "cell")
         version = _write_ivfpq_version(
             spark, cents, books, cells, _pack_codes(codes), index_dir,

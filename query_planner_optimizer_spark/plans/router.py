@@ -38,6 +38,12 @@ reference's router); the rollups are typically 10^3-10^6 rows where the
 base table is 10^9-10^12, so a routed query touches megabytes instead
 of terabytes. A Catalyst-rule variant would be idiomatic but adds no
 pruning beyond this, since routing happens before the plan is built.
+A rollup that reads as ONE split (``build_rollups`` writes each small
+rollup as one file) is cached as a single partition, so a routed
+group/order runs as one job and one task: no Exchange, no AQE re-plan.
+A rollup that reads as several splits keeps its hash Exchange — it is
+large enough that a parallel re-aggregation beats funnelling every row
+through one task.
 """
 
 from __future__ import annotations
@@ -152,6 +158,14 @@ class RollupRouter:
             # routed query pays it), so constructing a router is free.
             # INVARIANT: cached frames assume the files don't change;
             # after refresh_rollups call invalidate() (or rebuild).
+            # One split → coalesce(1) (no shuffle: a 1→1 narrow step) so
+            # the cached frame reports SinglePartition and every routed
+            # groupBy/orderBy over it plans without an Exchange — one
+            # job, one task. Several splits keep unknown partitioning:
+            # the re-aggregation then shuffles in parallel, which is
+            # what a rollup too big for one split needs.
+            if df.rdd.getNumPartitions() == 1:
+                df = df.coalesce(1)
             df = df.cache()
             self._frames[name] = df
         return self._frames[name]

@@ -14,6 +14,15 @@ scale-out behavior (reference equivalents cited per SURVEY.md §1.3/§4):
   (reference ``prepare.py:139-144``).
 - Arrow enabled — all Python-side exchange (toPandas, pandas UDFs) is
   Arrow-batched, never row-at-a-time.
+- Python call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``) — otherwise
+  every ``functions.*`` and ``DataFrame`` call walks the Python stack
+  and makes about four py4j round trips (active session, the
+  stack-depth conf, origin set and clear), a fixed cost on every
+  compiled or routed query. The cost of turning it off: an analysis
+  or runtime error's DataFrame query context no longer names the
+  Python file:line that built the failing expression. The error is
+  still raised with its message, and ``QueryRunner`` still reports it.
 """
 
 from __future__ import annotations
@@ -58,6 +67,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Static conf: read once per process by pyspark's _with_origin.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         # Small local datasets: don't let tiny files fan out into many tasks.
         .config("spark.sql.files.maxPartitionBytes", "128m")

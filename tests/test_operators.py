@@ -466,6 +466,29 @@ def test_pq_full_shortlist_equals_brute_force(emb):
         similarity.pq_topk(emb, dim=64, m=7)
 
 
+def test_pq_topk_corpus_smaller_than_ks(emb, tmp_path):
+    """A corpus with fewer vectors than ks codes per subspace trains
+    only the seeded codes: PQ then equals brute-force top-k (every
+    candidate reaches the exact rerank), the persisted IVF-PQ index
+    records the trained code count as its LUT stride, and an empty
+    corpus fails loudly."""
+    import pytest
+
+    tiny = emb.filter("vec_id < 20")
+    assert tiny.count() < similarity.PQ_KS
+    exact = {tuple(r) for r in similarity.cosine_topk(tiny).collect()}
+    assert {tuple(r) for r in similarity.pq_topk(tiny).collect()} == exact
+    idx = str(tmp_path / "ivfpq")
+    similarity.build_ivfpq_index(tiny, idx, nlist=2)
+    assert similarity._load_ivfpq_meta(idx)["ks"] == 20
+    probed = similarity.ivfpq_index_topk(
+        tiny.sparkSession, tiny, idx, source=tiny, nprobe=2,
+        shortlist=1 << 40)
+    assert {tuple(r) for r in probed.collect()} == exact
+    with pytest.raises(ValueError, match="at least one vector"):
+        similarity.pq_topk(emb.filter("vec_id < 0"))
+
+
 def test_pq_topk_recall_vs_exact(emb):
     approx = {(r.qid, r.nid) for r in similarity.pq_topk(emb).collect()}
     exact = {(r.qid, r.nid) for r in similarity.cosine_topk(emb).collect()}

@@ -171,6 +171,64 @@ def test_router_caches_rollup_frames(spark, tmp_path):
     assert "InMemoryTableScan" in plan
 
 
+def test_router_one_split_rollup_runs_one_job(spark, tmp_path):
+    """A rollup that reads as one split is cached as SinglePartition: a
+    routed grouped, ordered query over it has no Exchange and runs one
+    Spark job once the cache is filled. The same rollup written as two
+    files keeps its Exchange. Both answer like the unrouted scan."""
+    from query_planner_optimizer_spark.catalog import Catalog
+    from query_planner_optimizer_spark.plans.router import RollupRouter
+    from query_planner_optimizer_spark.prepare import (
+        build_rollups,
+        rollup_frame,
+    )
+
+    events = spark.range(400).selectExpr(
+        "date_add(DATE'2024-01-01', CAST(id % 7 AS INT)) AS day",
+        "CAST(id % 3 AS STRING) AS event_type",
+        "CAST(id AS DOUBLE) AS value",
+    )
+    events.write.parquet(str(tmp_path / "events.parquet"))
+    keys, aggs = ["day", "event_type"], {"value": ["sum", "count"]}
+    rollups = {"agg_d": {"keys": keys, "aggs": aggs}}
+    one_file = str(tmp_path / "aggs_one")
+    build_rollups(events, one_file, rollups)
+    two_files = str(tmp_path / "aggs_two")
+    rollup_frame(events, keys, aggs).repartition(2).write.parquet(
+        f"{two_files}/agg_d.parquet")
+    q = {"select": ["day", {"SUM": "value", "round": 4, "as": "s"},
+                    {"COUNT": "*", "as": "n"}],
+         "from": "events", "group_by": ["day"],
+         "order_by": [{"col": "day", "dir": "desc"}]}
+    cat = Catalog(spark, str(tmp_path), register_views=False)
+    want = compile_query(q, cat).collect()
+    sc = spark.sparkContext
+
+    def warm_run(agg_dir: str, group: str):
+        router = RollupRouter(spark, agg_dir, rollups)
+        router.route(q).collect()  # fills the rollup cache
+        df = router.route(q)
+        assert df is not None and router.last_rollup == "agg_d"
+        sc.setJobGroup(group, group)
+        try:
+            rows = df.collect()
+        finally:
+            sc.setJobGroup("", "")
+        router.invalidate()
+        return (rows, _plan(df),
+                len(sc.statusTracker().getJobIdsForGroup(group)))
+
+    rows, plan, jobs = warm_run(one_file, "one_split_rollup")
+    assert rows == want
+    assert "Exchange" not in plan and "Coalesce 1" in plan
+    assert jobs == 1
+
+    rows, plan, jobs = warm_run(two_files, "two_split_rollup")
+    assert rows == want
+    assert "Exchange hashpartitioning" in plan
+    assert jobs > 1
+
+
 def test_router_cost_based_rollup_choice(spark, tmp_path):
     """When several rollups qualify, the router must pick the SMALLEST
     by actual row count — planted so the fewest-grouping-keys proxy

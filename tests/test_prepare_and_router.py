@@ -297,6 +297,20 @@ def test_runner_isolates_errors(spark, prepared):
     assert report.runs[1].error is None and len(report.runs[1].rows) > 0
 
 
+def test_session_skips_call_site_capture_and_keeps_error_isolation(
+        spark, prepared):
+    """get_spark turns pyspark's per-call Python call-site capture off;
+    an invalid query still comes back as a QueryRun naming the fault."""
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    runner = QueryRunner(spark, prepared["catalog"])
+    run = runner.run_one({"select": ["type"], "from": "events",
+                          "where": [{"col": "no_such_col", "op": "eq",
+                                     "val": 1}]})
+    assert run.error is not None and "no_such_col" in run.error
+    assert run.rows == [] and run.columns == []
+
+
 def test_prepared_layout_is_hive_partitioned(prepared):
     import glob
     import os
