@@ -157,7 +157,14 @@ def dir_mutation_token(path: str) -> tuple:
     never cover (r16, ADVICE: the single-writer-per-index contract
     allows writer and probe readers to be different processes). One
     ``os.stat`` per probe; a missing path returns a sentinel that still
-    compares unequal to any real stat."""
+    compares unequal to any real stat.
+
+    Assumes the filesystem's directory mtime resolution is finer than
+    the gap between two publishes. On a store with 1-second mtimes
+    (some NFS mounts, HFS+), two publishes in the same second that
+    leave the directory size unchanged (a rename replacing an entry)
+    produce equal tokens, and a reader keeps serving the frame cached
+    after the first one."""
     try:
         st = os.stat(path)
         return (st.st_mtime_ns, st.st_size)

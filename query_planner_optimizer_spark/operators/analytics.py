@@ -29,11 +29,12 @@ from query_planner_optimizer_spark.functions.timeexpr import epoch_micros
 
 def top_n_per_group(
     df: DataFrame, part_cols: list[str], order_col: str, n: int,
-    tiebreak: str, descending: bool = True,
+    tiebreak: str,
 ) -> DataFrame:
-    """Top-n rows per group by ``order_col`` (deterministic tiebreak)."""
-    oc = F.col(order_col).desc() if descending else F.col(order_col).asc()
-    w = Window.partitionBy(*part_cols).orderBy(oc, F.col(tiebreak).asc())
+    """Top-n rows per group by ``order_col`` descending (deterministic
+    ascending ``tiebreak``)."""
+    w = Window.partitionBy(*part_cols).orderBy(
+        F.col(order_col).desc(), F.col(tiebreak).asc())
     return (
         df.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= n)

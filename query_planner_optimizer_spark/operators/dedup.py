@@ -129,36 +129,21 @@ def jaccard_pairs(
     text_col: str = "text",
     n: int = DEFAULT_NGRAM,
     threshold: float = DEFAULT_JACCARD_THRESHOLD,
-    persist_shingles: bool = True,
-    drop_singletons: bool = False,
 ) -> DataFrame:
     """Exact n-gram Jaccard similar pairs via inverted-index self-join.
 
     Plan shape: per-doc distinct shingle-hash arrays (one tokenize
-    pass, persisted) → explode (doc_id, sz, h) → self equi-join on the
-    8-byte hash (shuffle key = hash, so no cross join) → ONE pair
-    aggregation producing common count and both set sizes → Jaccard
-    filter. Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
+    pass, persisted eagerly at call time so the join's branches read
+    it once) → explode (doc_id, sz, h) → self equi-join on the 8-byte
+    hash (shuffle key = hash, so no cross join) → ONE pair aggregation
+    producing common count and both set sizes → Jaccard filter.
+    Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
 
-    ``persist_shingles`` (r16, mirroring :func:`minhash_lsh_pairs`):
-    the default eagerly persists the per-doc hash arrays at call time
-    so the join's branches read ONE tokenize pass; False skips the
-    persist AND its eager materialization (a caller that only builds
-    the plan pays nothing), recomputing the bounded lineage per
-    consumer instead.
-
-    ``drop_singletons`` (r16): pre-filter the self-join's input to
-    shingle hashes with document frequency >= 2 (a hash held by one
-    document cannot produce a pair) via one narrow count aggregation +
-    left-semi join. Result-identical — pinned by test + exact pair-set
-    equality at sf0.01/sf0.1 — but MEASURED SLOWER at every available
-    scale on this workload (same-session alternating A/B: pairs
-    2.3 → 3.5 s at sf0.1; 16.6 → 178 s on the 10×-replicated sf1
-    corpus, where every shingle has df >= 10 so the filter drops
-    nothing while its extra pass and semi-join break the self-join's
-    reused-exchange + AQE skew handling). Default OFF: use it only for
-    singleton-dominated corpora where the df pass is cheap relative to
-    the join it shrinks — and measure first (guide §1).
+    A document-frequency pre-filter (drop hashes held by one document)
+    was measured slower at every available scale (pairs 2.3 → 3.5 s at
+    sf0.1; 16.6 → 178 s on the 10×-replicated sf1 corpus, where it
+    drops nothing but breaks the self-join's reused exchange and AQE
+    skew handling), so the join reads every hash.
 
     Scale: hot (near-stopword) shingles create join skew; AQE skew-join
     splits them at runtime. For corpus-scale dedup prefer
@@ -176,22 +161,12 @@ def jaccard_pairs(
     # pass — the pre-r15 plan evaluated the tokenize+shingle lineage
     # six times per call (2 sizes aggregations + 2 broadcast builds +
     # 2 explode sides; 105 s of executor time at sf0.1).
-    ds = _doc_shingle_hashes(df, id_col, text_col, n)
-    if persist_shingles:
-        ds = ds.persist()
-        _retire_previous(_JACCARD_PERSIST_SLOT, ds)
-        ds.count()
+    ds = _doc_shingle_hashes(df, id_col, text_col, n).persist()
+    _retire_previous(_JACCARD_PERSIST_SLOT, ds)
+    ds.count()
     ex = ds.select(
         "doc_id", F.size("hs").alias("sz"), F.explode("hs").alias("h")
     )
-    if drop_singletons:
-        eligible = (
-            ex.groupBy("h")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") >= 2)
-            .select("h")
-        )
-        ex = ex.join(eligible, "h", "left_semi")
     a, b = ex.alias("a"), ex.alias("b")
     common = (
         a.join(b, (F.col("a.h") == F.col("b.h"))
@@ -824,18 +799,18 @@ def minhash_lsh_pairs(
     k: int = MINHASH_K,
     bands: int = MINHASH_BANDS,
     threshold: float = DEFAULT_JACCARD_THRESHOLD,
-    verify: bool = True,
-    persist_shingles: bool = True,
     portable: bool = False,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """MinHash-LSH candidate pairs, optionally verified by exact Jaccard.
+    """MinHash-LSH candidate pairs verified by exact Jaccard.
 
     Bands the k-long signature into ``bands`` groups of k/bands rows;
     docs colliding on any whole band become candidates (equi-join on
     (band_id, band_signature) — the classic LSH bucket join; shuffle
     key is the 2-tuple, never a cross join). With k=32, b=8, r=4 the
-    S-curve threshold is (1/8)^(1/4) ≈ 0.59 Jaccard.
+    S-curve threshold is (1/8)^(1/4) ≈ 0.59 Jaccard. Each candidate is
+    then verified by exact Jaccard over the two docs' shingle hashes, so
+    every returned pair has ``jaccard >= threshold``.
 
     ``portable=True`` swaps every hash for its md5 twin (same plan
     shape: map-side signatures, banded equi-join, candidate-proportional
@@ -863,20 +838,17 @@ def minhash_lsh_pairs(
     # hashes per shingle, and the pre-r15 persist of ``hs`` only still
     # computed it twice, once per self-join side). Footprint is
     # (doc_id, array<long>, array<long>), far smaller than the corpus
-    # text; at extreme scale pass persist_shingles=False and let
-    # lineage recompute.
+    # text.
     ds = _doc_shingle_hashes(df, id_col, text_col, n, portable=portable)
     sigf = ds.select(
         "doc_id", "hs",
         _minhash_sig(F.col("hs"), k, portable=portable).alias("sig"),
-    )
-    if persist_shingles:
-        # Materialize eagerly: lazy persists race under the self-join's
-        # concurrent map stages, each computing the full lineage before
-        # the cache fills.
-        sigf = sigf.persist()
-        _retire_previous(_MINHASH_PERSIST_SLOT, sigf)
-        sigf.count()
+    ).persist()
+    # Materialize eagerly: lazy persists race under the self-join's
+    # concurrent map stages, each computing the full lineage before
+    # the cache fills.
+    _retire_previous(_MINHASH_PERSIST_SLOT, sigf)
+    sigf.count()
     banded = _banded_from_sig(
         sigf.select("doc_id", "sig"), k, bands, portable=portable)
     if max_bucket_size is not None:
@@ -900,8 +872,6 @@ def minhash_lsh_pairs(
         )
         .distinct()
     )
-    if not verify:
-        return cand
     # Candidate-proportional exact verification — work ∝
     # |candidates|·shingles, never the full inverted-index self-join
     # (that's the whole point of LSH). Jaccard over 64-bit shingle

@@ -27,10 +27,9 @@ Design:
   r13; the portable md5 mode, hex strings, runs ~4× that and exists
   for oracle-checkability, not production). The trade is storage ≈
   O(corpus) for never re-READING or re-TOKENIZING the corpus text on
-  any future shard; pipelines that only need candidate generation
-  (re-verify from raw text on the candidate subset, which is
-  candidate-proportional I/O) can skip ``shingles/`` entirely via
-  ``verify=False``.
+  any future shard: every probe verifies its candidates against
+  ``shingles/``, and :func:`incremental_clusters` scans it for the
+  shard's cross pairs.
 
 - :func:`incremental_minhash_pairs` signatures ONLY the shard, bands
   it with the exact same plan as the full-corpus path
@@ -379,16 +378,9 @@ def build_dedup_index(
     bands: int = MINHASH_BANDS,
     portable: bool = False,
     mode: str = "overwrite",
-    write_shingles: bool = True,
     bucket_bands: int | None = None,
 ) -> None:
     """Persist the corpus dedup index (bands/ shingles/ digests/).
-
-    ``write_shingles=False`` skips the verification side-input (the
-    only O(tokens)-sized dataset — see module docstring): candidate
-    generation and exact dedup still work; verification then needs
-    ``verify=False`` on the probe plus a caller-side exact check over
-    raw text restricted to the candidates.
 
     One pass over the corpus text: tokenize → shingle-hash arrays
     (map-side, dedup.py:_doc_shingle_hashes), written as ``shingles/``;
@@ -421,16 +413,14 @@ def build_dedup_index(
                                 portable=portable,
                                 bucket_bands=bucket_bands)
         _staged_append(ds, digests_df, index_dir, k, bands,
-                       portable=portable, write_shingles=write_shingles)
+                       portable=portable)
         return
     # The banded frame re-reads ds lineage; at index-build scale that is
     # one extra tokenize pass over the shard/corpus being indexed —
     # persist to pay it once (arrays of longs, far smaller than text).
     ds = ds.persist()
     try:
-        if write_shingles:
-            ds.write.mode(mode).parquet(
-                os.path.join(index_dir, "shingles"))
+        ds.write.mode(mode).parquet(os.path.join(index_dir, "shingles"))
         bands_df = banded_signature_frame(ds, k, bands, portable=portable)
         if bucket_bands is not None:
             _write_bands_bucketed(
@@ -464,8 +454,7 @@ def build_dedup_index(
     # against the layout they must match (see _validate_append_params).
     tmp = _indexspec_path(index_dir) + ".tmp"
     with open(tmp, "w") as f:
-        json.dump({"n": n, "k": k, "bands": bands, "portable": portable,
-                   "write_shingles": write_shingles}, f)
+        json.dump({"n": n, "k": k, "bands": bands, "portable": portable}, f)
     os.replace(tmp, _indexspec_path(index_dir))
     from query_planner_optimizer_spark.catalog import invalidate_reader_caches
 
@@ -479,7 +468,6 @@ def _staged_append(
     k: int,
     bands: int,
     portable: bool,
-    write_shingles: bool,
 ) -> None:
     """Crash-safe shard append: stage bands/shingles/digests completely
     under ``_staging_<token>/``, write the ``_pending_<token>.json``
@@ -494,12 +482,7 @@ def _staged_append(
     spec = _load_bucketspec(index_dir)
     ds = ds.persist()
     try:
-        datasets = []
-        if write_shingles and os.path.isdir(
-                os.path.join(index_dir, "shingles")):
-            ds.write.mode("overwrite").parquet(
-                os.path.join(stg_root, "shingles"))
-            datasets.append("shingles")
+        ds.write.mode("overwrite").parquet(os.path.join(stg_root, "shingles"))
         bands_df = banded_signature_frame(ds, k, bands, portable=portable)
         if spec is not None:
             stg_tbl = f"{_bands_table_name(index_dir)}_stg_{token}"
@@ -514,14 +497,12 @@ def _staged_append(
                 .write.mode("overwrite")
                 .parquet(os.path.join(stg_root, "bands"))
             )
-        datasets.append("bands")
     finally:
         ds.unpersist()
     digests_df.write.mode("overwrite").parquet(
         os.path.join(stg_root, "digests"))
-    datasets.append("digests")
     files = {name: _data_files(os.path.join(stg_root, name))
-             for name in datasets}
+             for name in ("shingles", "bands", "digests")}
     marker = os.path.join(index_dir, f"_pending_{token}.json")
     tmp = marker + ".tmp"
     with open(tmp, "w") as f:
@@ -542,7 +523,6 @@ def incremental_minhash_pairs(
     threshold: float = 0.5,
     portable: bool = False,
     broadcast_shard: bool = True,
-    verify: bool = True,
 ) -> DataFrame:
     """Near-dup pairs between a NEW shard and the indexed corpus:
     (corpus_id, shard_id, jaccard), jaccard ≥ threshold.
@@ -603,11 +583,6 @@ def incremental_minhash_pairs(
         )
         .distinct()
     )
-    if not verify:
-        # Candidates only (banding recall, no Jaccard gate) — for
-        # indexes built with write_shingles=False; the caller verifies
-        # against raw text on this candidate-proportional subset.
-        return cand
     ds_c = _index_parquet(spark, index_dir, "shingles")
     shard_side = F.broadcast(ds_s) if broadcast_shard else ds_s
     return verify_candidate_pairs(
@@ -621,7 +596,6 @@ def incremental_exact_dups(
     id_col: str = "doc_id",
     text_col: str = "text",
     index_dir: str = "",
-    broadcast_shard: bool = True,
 ) -> DataFrame:
     """Shard documents whose content already exists in the corpus:
     (shard_id, corpus_keep_id, content_hash). ``corpus_keep_id`` is the
@@ -633,12 +607,10 @@ def incremental_exact_dups(
     then a candidate-proportional min-aggregation picks the keeper.
     """
     repair_index(index_dir)
-    sh = shard.select(
+    sh = F.broadcast(shard.select(
         F.sha2(F.col(text_col), 256).alias("content_hash"),
         F.col(id_col).alias("shard_id"),
-    )
-    if broadcast_shard:
-        sh = F.broadcast(sh)
+    ))
     idx = _index_parquet(spark, index_dir, "digests")
     return (
         idx.join(sh, "content_hash")
@@ -678,8 +650,6 @@ def incremental_clusters(
     n: int = DEFAULT_NGRAM,
     threshold: float = DEFAULT_JACCARD_THRESHOLD,
     portable: bool = False,
-    broadcast_shard: bool = True,
-    cc_method: str = "star",
 ) -> DataFrame:
     """Daily CLUSTER maintenance: fold a new shard into an existing
     near-dup cluster assignment WITHOUT re-pairing the corpus —
@@ -702,21 +672,17 @@ def incremental_clusters(
     shingle arrays (hash longs, map-side) against the BROADCAST
     shard's shingles; the only corpus-proportional cost is one scan
     of ``shingles/``. Old clusters enter as star edges (diameter ≤ 2),
-    so CC converges in O(1) extra rounds regardless of corpus size.
-    ``broadcast_shard=False`` degrades the cross join to a shuffled
-    hash join for backfill-sized shards."""
+    so CC converges in O(1) extra rounds regardless of corpus size."""
     repair_index(index_dir)
     named = shard.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     ds_s = _doc_shingle_hashes(named, "doc_id", "text", n,
                                portable=portable).persist()
     try:
-        sh_s = ds_s.select(
-            F.col("doc_id").alias("s_doc"), F.explode("hs").alias("h"))
-        sz_s = ds_s.select(
-            F.col("doc_id").alias("s_doc"), F.size("hs").alias("sz_s"))
-        if broadcast_shard:
-            sh_s, sz_s = F.broadcast(sh_s), F.broadcast(sz_s)
+        sh_s = F.broadcast(ds_s.select(
+            F.col("doc_id").alias("s_doc"), F.explode("hs").alias("h")))
+        sz_s = F.broadcast(ds_s.select(
+            F.col("doc_id").alias("s_doc"), F.size("hs").alias("sz_s")))
         ds_c = _index_parquet(spark, index_dir, "shingles")
         sh_c = ds_c.select(
             F.col("doc_id").alias("c_doc"), F.explode("hs").alias("h"))
@@ -749,7 +715,7 @@ def incremental_clusters(
             .unionByName(named.select("doc_id"))
             .distinct()
         )
-        comp = connected_components(edges, verts, method=cc_method)
+        comp = connected_components(edges, verts, method="star")
         sizes = comp.groupBy("cluster_id").agg(
             F.count(F.lit(1)).alias("cluster_size"))
         out = (

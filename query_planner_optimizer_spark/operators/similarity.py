@@ -2279,7 +2279,6 @@ def semantic_dedup(
     threshold: float = NEARDUP_THRESHOLD,
     planes: int = NEARDUP_PLANES,
     tables: int = NEARDUP_TABLES,
-    cc_method: str = "propagation",
 ) -> DataFrame:
     """Semantic (embedding-space) corpus dedup — the composition a
     training-data pipeline actually runs: LSH near-dup pairs →
@@ -2301,7 +2300,7 @@ def semantic_dedup(
     )
     comp = connected_components(
         pairs.select("id_a", "id_b"), df.select(F.col(id_col)),
-        src="id_a", dst="id_b", vid=id_col, method=cc_method,
+        src="id_a", dst="id_b", vid=id_col,
     )
     sizes = comp.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cluster_size")

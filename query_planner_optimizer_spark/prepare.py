@@ -43,6 +43,9 @@ from query_planner_optimizer_spark.functions.histq import (
 )
 from query_planner_optimizer_spark.sources.events_csv import read_events_csv
 
+#: Hive partition columns of the prepared events copy (``type=<t>/day=<d>``).
+PARTITION_COLS = ("type", "day")
+
 #: The five summary rollups (reference prepare.py:148-244; README.md:268-274).
 #: Grain chosen so every pattern the reference's router serves
 #: (query_engine.py:143-232) is answerable by re-aggregation.
@@ -498,7 +501,6 @@ def bucketize(
     table_name: str,
     keys: list[str],
     num_buckets: int = 64,
-    sorted_buckets: bool = True,
 ) -> DataFrame:
     """Write a bucketed (and bucket-sorted) copy of a table so joins and
     aggregations on the bucket keys are CO-LOCATED — both sides read
@@ -512,10 +514,12 @@ def bucketize(
     metadata lives in the metastore, which is what lets Catalyst trust
     the layout.
     """
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, *keys)
-    if sorted_buckets:
-        writer = writer.sortBy(*keys)
-    writer.saveAsTable(table_name)
+    (
+        df.write.mode("overwrite")
+        .bucketBy(num_buckets, *keys)
+        .sortBy(*keys)
+        .saveAsTable(table_name)
+    )
     return df.sparkSession.table(table_name)
 
 
@@ -524,7 +528,6 @@ def compact(
     path: str,
     out_path: str,
     target_mb: int = 128,
-    partition_cols: tuple[str, ...] = (),
 ) -> int:
     """Small-files compaction: rewrite a parquet dataset into
     ~``target_mb`` files. Streaming sinks, incremental appends and
@@ -533,10 +536,8 @@ def compact(
     compaction is a standing maintenance job, not a rarity.
 
     File count = dataset bytes / target (via the Hadoop FS API, so the
-    same measurement works on HDFS/S3A); rewrite is one shuffle —
-    keyed on the partition columns when the layout is hive-partitioned
-    (preserving pruning), round-robin otherwise. Returns the file
-    count written.
+    same measurement works on HDFS/S3A); rewrite is one round-robin
+    shuffle. Returns the file count written.
     """
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
@@ -544,15 +545,8 @@ def compact(
     total_bytes = fs.getContentSummary(jpath).getLength()
     n = max(1, int(total_bytes // (target_mb * 1024 * 1024)) + 1)
 
-    df = spark.read.parquet(path)
-    if partition_cols:
-        out = df.repartition(n, *[F.col(c) for c in partition_cols])
-        out.write.mode("overwrite").partitionBy(*partition_cols).parquet(
-            out_path
-        )
-    else:
-        out = df.repartition(n)
-        out.write.mode("overwrite").parquet(out_path)
+    spark.read.parquet(path).repartition(n).write.mode("overwrite").parquet(
+        out_path)
     invalidate_reader_caches(out_path)
     return n
 
@@ -603,8 +597,6 @@ def prepare(
     spark: SparkSession,
     data: str | DataFrame,
     out_dir: str,
-    partition_cols: tuple[str, str] = ("type", "day"),
-    with_rollups: bool = True,
     profile: str = "default",
 ) -> PrepareResult:
     """Run the full prepare pipeline.
@@ -628,33 +620,31 @@ def prepare(
     # One shuffle keyed on the partition columns → one file per (type,
     # day) dir instead of numPartitions files per dir.
     _profile_writer(
-        events.repartition(*[F.col(c) for c in partition_cols])
+        events.repartition(*PARTITION_COLS)
         .write.mode("overwrite")
-        .partitionBy(*partition_cols),
+        .partitionBy(*PARTITION_COLS),
         prof,
     ).parquet(part_dir)
 
-    written = []
-    if with_rollups:
-        # Re-read the partitioned copy: rollup scans then read zstd
-        # parquet (column-pruned), not the raw CSV again.
-        prepared = augment_time_columns(spark.read.parquet(part_dir))
-        written = build_rollups(prepared, agg_dir, ROLLUPS, profile=profile)
+    # Re-read the partitioned copy: rollup scans then read zstd
+    # parquet (column-pruned), not the raw CSV again.
+    prepared = augment_time_columns(spark.read.parquet(part_dir))
+    written = build_rollups(prepared, agg_dir, ROLLUPS, profile=profile)
 
-        # stats.parquet: key/value dataset stats (reference prepare.py:246-269)
-        stats = events.agg(
-            F.count(F.lit(1)).alias("total_rows"),
-            F.countDistinct("auction_id").alias("n_auctions"),
-            F.min("day").cast("string").alias("min_day"),
-            F.max("day").cast("string").alias("max_day"),
-        )
-        kv = stats.selectExpr(
-            "stack(4, 'total_rows', CAST(total_rows AS STRING), "
-            "'n_auctions', CAST(n_auctions AS STRING), "
-            "'min_day', min_day, 'max_day', max_day) AS (key, value)"
-        )
-        kv.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(agg_dir, "stats.parquet")
-        )
+    # stats.parquet: key/value dataset stats (reference prepare.py:246-269)
+    stats = events.agg(
+        F.count(F.lit(1)).alias("total_rows"),
+        F.countDistinct("auction_id").alias("n_auctions"),
+        F.min("day").cast("string").alias("min_day"),
+        F.max("day").cast("string").alias("max_day"),
+    )
+    kv = stats.selectExpr(
+        "stack(4, 'total_rows', CAST(total_rows AS STRING), "
+        "'n_auctions', CAST(n_auctions AS STRING), "
+        "'min_day', min_day, 'max_day', max_day) AS (key, value)"
+    )
+    kv.coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(agg_dir, "stats.parquet")
+    )
 
     return PrepareResult(part_dir, agg_dir, written)

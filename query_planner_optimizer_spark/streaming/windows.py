@@ -432,21 +432,6 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize(events)
 
 
-def fetch_arrow(df: DataFrame):
-    """Arrow-batched driver fetch for result-heavy serving paths (r16,
-    guide §6 "Arrow for driver transfers"): returns the result as one
-    ``pyarrow.Table``. ``DataFrame.collect()`` pickles every row
-    through the JVM→Python boundary one Row object at a time — for the
-    sessionize entry ~70% of its bench wall-time is that fetch, not
-    the computation (r15 noop-sink isolation) — while ``toArrow()``
-    streams columnar batches. Row content is identical (pinned in
-    tests); consumers wanting tuples call ``.to_pylist()`` or feed the
-    table straight to pandas/polars. This is a SERVING helper: the
-    bench contract still times ``collect()`` so driver-measured warm
-    numbers stay comparable across rounds."""
-    return df.toArrow()
-
-
 def q_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from query_planner_optimizer_spark.catalog import Catalog
 

@@ -191,7 +191,6 @@ def main() -> int:
     def minhash_synth(spark, kk):
         return dedup.minhash_lsh_pairs(
             synth_docs(spark, MINHASH_BASE_DOCS * kk),
-            verify=True,
             max_bucket_size=64,
         )
 

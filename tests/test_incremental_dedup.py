@@ -149,30 +149,6 @@ def test_probe_join_broadcasts_shard(spark, docs):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_candidates_only_path_superset(spark, docs):
-    """write_shingles=False + verify=False: the slim index (no
-    O(tokens) dataset) must yield a candidate set that is a SUPERSET of
-    the verified pairs from the full index — banding recall is
-    unchanged; only the Jaccard gate moves to the caller."""
-    corpus = docs.filter(F.col("doc_id") % 8 != 0)
-    shard = docs.filter(F.col("doc_id") % 8 == 0)
-    d_slim = tempfile.mkdtemp(prefix="qpo_incr_slim_")
-    d_full = tempfile.mkdtemp(prefix="qpo_incr_full_")
-    inc.build_dedup_index(corpus, d_slim, write_shingles=False)
-    inc.build_dedup_index(corpus, d_full)
-    assert not os.path.exists(os.path.join(d_slim, "shingles"))
-    cand = inc.incremental_minhash_pairs(
-        spark, shard, d_slim, threshold=0.2, verify=False
-    )
-    assert set(cand.columns) == {"corpus_id", "shard_id"}
-    cand_set = set(map(tuple, cand.collect()))
-    verified = inc.incremental_minhash_pairs(
-        spark, shard, d_full, threshold=0.2
-    )
-    ver_set = {(r.corpus_id, r.shard_id) for r in verified.collect()}
-    assert ver_set <= cand_set
-
-
 def test_streaming_ingest_gate_equals_batch(spark, docs, tmp_path):
     """ingest_gate's shared body through a REAL readStream (file
     source, 2 files → 2 micro-batches, availableNow) must admit
@@ -428,23 +404,19 @@ def test_bucketed_probe_no_index_side_shuffle(spark, docs):
     try:
         got = inc.incremental_minhash_pairs(
             spark, shard, d_bkt, threshold=0.2, broadcast_shard=False)
-        rows = sorted(map(tuple, got.collect()))
-        # Plan audit on the candidate-only probe (the join under test):
-        cand = inc.incremental_minhash_pairs(
-            spark, shard, d_bkt, threshold=0.2, broadcast_shard=False,
-            verify=False)
-        cand.collect()  # finalize AQE
-        plan = cand._jdf.queryExecution().executedPlan().toString()
+        rows = sorted(map(tuple, got.collect()))  # also finalizes AQE
+        plan = got._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan
         assert "SelectedBucketsCount" in plan  # index scanned bucketed
-        # Same candidate plan on the PLAIN index shuffles BOTH sides;
-        # the bucketed plan must have exactly one fewer exchange (the
-        # index side's) — the zero-index-side-shuffle claim, counted.
-        cand_plain = inc.incremental_minhash_pairs(
-            spark, shard, d_plain, threshold=0.2, broadcast_shard=False,
-            verify=False)
-        cand_plain.collect()
-        plan_plain = cand_plain._jdf.queryExecution() \
+        # The same verified probe on the PLAIN index shuffles both sides
+        # of the candidate join; the verification joins downstream are
+        # identical on both layouts, so the bucketed plan must have
+        # exactly one fewer exchange (the index side's) — the
+        # zero-index-side-shuffle claim, counted.
+        got_plain = inc.incremental_minhash_pairs(
+            spark, shard, d_plain, threshold=0.2, broadcast_shard=False)
+        got_plain.collect()
+        plan_plain = got_plain._jdf.queryExecution() \
             .executedPlan().toString()
         # toString of an AdaptiveSparkPlan repeats the tree under
         # "== Initial Plan ==" — count exchanges in the FINAL plan only.

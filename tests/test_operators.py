@@ -316,27 +316,6 @@ def test_cc_round_plan_one_exchange_carries_partial_min(spark):
     assert "partial_min" in plan, plan
 
 
-def test_jaccard_pairs_persist_flag_and_singleton_drop(docs):
-    """r16: (a) persist_shingles=False (the plan-construction-only /
-    extreme-scale opt-out, ADVICE) produces the identical pair set;
-    (b) drop_singletons=True puts the df>=2 semi-join BELOW the pair
-    self-join in the plan and produces the identical pair set
-    (singleton hashes cannot form pairs) — the knob is default-OFF
-    because it measured slower at every available scale (see
-    OPTIMIZATION_r16.md), but its correctness stays pinned here."""
-    base = sorted(
-        map(tuple, dedup.jaccard_pairs(docs, threshold=0.2).collect()))
-    lazy = dedup.jaccard_pairs(docs, threshold=0.2,
-                               persist_shingles=False)
-    assert "LeftSemi" not in dedup._formatted_plan(lazy)
-    assert sorted(map(tuple, lazy.collect())) == base
-    dropped = dedup.jaccard_pairs(docs, threshold=0.2,
-                                  persist_shingles=False,
-                                  drop_singletons=True)
-    assert "LeftSemi" in dedup._formatted_plan(dropped)
-    assert sorted(map(tuple, dropped.collect())) == base
-
-
 def test_dedup_clusters_matches_recursive_oracle(docs, ddb):
     assert_matches_duckdb(
         dedup.dedup_clusters(docs, threshold=0.2),
@@ -441,6 +420,48 @@ def test_ivf_full_probe_equals_brute_force(emb):
             similarity.ivf_topk(emb, nprobe=similarity.IVF_NLIST).collect()}
     exact = {tuple(r) for r in similarity.cosine_topk(emb).collect()}
     assert full == exact
+
+
+def test_assigned_cells_in_row_argmax_no_shuffle(spark):
+    """The IVF cell assignment is per-row math: its executed plan has
+    no shuffle Exchange — the only exchange is the BroadcastExchange of
+    the packed centroid matrix — and every row's cell equals a Python
+    brute-force argmax of the cosine to each centroid (ties toward the
+    lower cell; a zero vector or zero centroid scores 0.0)."""
+    import math
+    import random
+    import re
+
+    rng = random.Random(7)
+    dim = 8
+    vecs = [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(40)]
+    vecs.append([0.0] * dim)
+    cents = [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(5)]
+    cents.append([0.0] * dim)
+    side = similarity.with_norm(spark.createDataFrame(
+        list(enumerate(vecs)), "id long, embedding array<double>"),
+    ).select("id", "_vec", "_norm")
+
+    out = similarity._assigned_cells(side, cents)
+    got = {r.id: r.cell for r in out.collect()}  # also finalizes AQE
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    exchanges = re.findall(r"(\w*)Exchange\b", final)
+    assert exchanges and set(exchanges) == {"Broadcast"}, final
+
+    def dot(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    def csim(v, c):
+        n, cn = math.sqrt(dot(v, v)), math.sqrt(dot(c, c)) or 1.0
+        return dot(v, c) / (n * cn) if n > 0 else 0.0
+
+    want = {i: max(range(len(cents)), key=lambda c: (csim(v, cents[c]), -c))
+            for i, v in enumerate(vecs)}
+    assert got == want
 
 
 def test_ivf_topk_recall_vs_exact(emb):

@@ -41,8 +41,8 @@ def test_sessionize_matches_oracle(spark, ddb):
 
 
 def test_fetch_arrow_rows_identical_to_collect(spark):
-    """r16 serving helper: the Arrow-batched fetch returns exactly the
-    rows collect() returns (same values, same columns) — only the
+    """The Arrow-batched fetch (``DataFrame.toArrow()``) returns exactly
+    the rows collect() returns (same values, same columns) — only the
     transfer encoding differs. Timestamps normalize through epoch
     seconds: collect() hands back naive local-time datetimes while
     Arrow hands back tz-aware ones; .timestamp() maps both to the same
@@ -58,7 +58,7 @@ def test_fetch_arrow_rows_identical_to_collect(spark):
     via_collect = sorted(tuple(norm(v) for v in r) for r in df.collect())
     via_arrow = sorted(
         tuple(norm(d[c]) for c in df.columns)
-        for d in windows.fetch_arrow(df).to_pylist()
+        for d in df.toArrow().to_pylist()
     )
     assert via_arrow == via_collect
 
