@@ -66,22 +66,16 @@ only — the corpus-sized index is never shuffled, at any shard size
 still clusters rows by (band, bsig) (repartition +
 sortWithinPartitions) so row-group stats stay tight.
 
-Crash discipline: ``mode="append"`` stages all three datasets under
-``_staging_<token>/`` and publishes them through a ``_pending_*.json``
-marker (per-file atomic renames); a crash anywhere leaves either a
-referenced-by-nothing staging dir (garbage-collected once it is older
-than :data:`STAGING_GC_GRACE_SECONDS` — never while a live append may
-still be staging it) or a marker whose publish is completed
-idempotently by :func:`repair_index`, which every entry point runs
-first. A torn append can therefore never serve a partially-indexed
-shard.
-
-Concurrency contract: one WRITER per index at a time (appends and
-compactions are not a multi-writer commit protocol); any number of
-concurrent READERS — the repair pass every reader runs is idempotent
-and tolerates a concurrent repairer at each step, and appends are
-validated against the recorded build params (``_indexspec.json``) so
-a mismatched append fails loudly instead of corrupting probes.
+Crash discipline: ``mode="append"`` stages all three datasets and
+publishes them through the shared staged-append protocol with the index
+dir as its publish root; every entry point repairs first, so a torn
+append can never serve a partially-indexed shard. The crash and
+concurrency contract (one writer, many readers in any process) is
+described once, in operators/indexstore.py. Appends are also validated
+against the recorded build params (``_indexspec.json``), so a
+mismatched append fails loudly instead of corrupting probes. The index
+is not versioned: compaction swaps each dataset with two renames
+(:func:`compact_index`).
 """
 
 from __future__ import annotations
@@ -90,12 +84,13 @@ import hashlib
 import json
 import os
 import shutil
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from query_planner_optimizer_spark import catalog
+from query_planner_optimizer_spark.operators import indexstore
 from query_planner_optimizer_spark.operators.dedup import (
     DEFAULT_JACCARD_THRESHOLD,
     DEFAULT_NGRAM,
@@ -245,129 +240,6 @@ def _write_bands_bucketed(bands_df: DataFrame, index_dir: str,
     )
 
 
-#: Grace period (seconds) before an unreferenced ``_staging_*`` dir is
-#: garbage-collected by :func:`repair_index`. A marker-less staging dir
-#: is EITHER pre-marker garbage from a crash OR an append currently
-#: mid-staging in another process — mtime age is the only way to tell
-#: them apart, so only dirs older than this are dropped. A crashed
-#: append's garbage still heals on the first touch after the grace
-#: window; an in-flight append is never destroyed under it.
-STAGING_GC_GRACE_SECONDS = 3600.0
-
-
-def _index_parquet(spark: SparkSession, index_dir: str, name: str):
-    """Session-cached reader frame for one index dataset (r15, guide
-    §5 driver work: repeated probes were paying a driver file-listing
-    + schema read per dataset per call). Every IN-PROCESS mutation
-    path — build overwrite, staged-append publish (repair_index),
-    compaction swap — calls ``invalidate_reader_caches(index_dir)``;
-    the mutation token additionally guards against CROSS-PROCESS
-    writers (r16, ADVICE): the single-writer contract still allows the
-    writer and probe readers to live in different processes, and a
-    foreign publish leaves no pending marker for this process's
-    repair_index to see — so each probe re-checks one dir stat and
-    re-lists only when the dataset dir actually changed."""
-    from query_planner_optimizer_spark.catalog import (
-        cached_parquet,
-        dir_mutation_token,
-    )
-
-    path = os.path.join(index_dir, name)
-    return cached_parquet(spark, path, token=dir_mutation_token(path))
-
-
-def repair_index(index_dir: str) -> None:
-    """Complete or garbage-collect a torn append (crash mid-publish).
-
-    Invariants the staged-append protocol gives us: a ``_pending_*``
-    marker is written only AFTER all staged files are fully on disk,
-    and every marker lists exactly the files to publish. So on entry:
-    (1) for each marker, finish its publish idempotently — each listed
-    file is renamed into the live dataset unless it already arrived;
-    (2) any ``_staging_*`` dir with no surviving marker AND older than
-    :data:`STAGING_GC_GRACE_SECONDS` is pre-marker garbage (referenced
-    by nothing) and is removed — younger dirs are left alone because
-    they may be another process's append mid-staging. Every read/build
-    entry point calls this first, so a broken index heals on next
-    touch instead of silently serving a partially-indexed shard.
-
-    Concurrency contract: WRITES (appends/compactions) require a
-    single writer per index — the staged-rename publish is not a
-    multi-writer commit protocol. Concurrent READERS are safe,
-    including two probes repairing the same marker at once: every
-    publish step here tolerates the other repairer having already
-    done it (rename races resolve by re-checking the destination,
-    marker/staging removal tolerates already-gone)."""
-    if not os.path.isdir(index_dir):
-        return
-    import time
-
-    changed = False
-    for name in sorted(os.listdir(index_dir)):
-        if not (name.startswith("_pending_") and name.endswith(".json")):
-            continue
-        marker = os.path.join(index_dir, name)
-        try:
-            with open(marker) as f:
-                plan = json.load(f)
-        except FileNotFoundError:
-            continue  # a concurrent repairer finished this marker
-        stg_root = os.path.join(index_dir, plan["staging"])
-        for dataset, files in plan["files"].items():
-            live = os.path.join(index_dir, dataset)
-            os.makedirs(live, exist_ok=True)
-            for fn in files:
-                dst = os.path.join(live, fn)
-                if os.path.exists(dst):
-                    continue  # published before the crash
-                src = os.path.join(stg_root, dataset, fn)
-                try:
-                    os.rename(src, dst)
-                except FileNotFoundError:
-                    # Lost the rename race to a concurrent repairer —
-                    # fine iff the file did land in the live dataset.
-                    if os.path.exists(dst):
-                        continue
-                    raise RuntimeError(
-                        f"torn append in {index_dir}: {dataset}/{fn} is "
-                        f"in neither staging nor the live dataset — the "
-                        f"index needs a rebuild"
-                    ) from None
-        shutil.rmtree(stg_root, ignore_errors=True)
-        try:
-            os.remove(marker)
-        except FileNotFoundError:
-            pass  # concurrent repairer removed it
-        changed = True
-    now = time.time()
-    for name in os.listdir(index_dir):
-        if name.startswith("_staging_"):
-            # No marker references it (all markers were just consumed):
-            # either pre-marker crash garbage or an append another
-            # process is staging RIGHT NOW — only age can distinguish,
-            # so GC strictly after the grace window.
-            path = os.path.join(index_dir, name)
-            try:
-                age = now - os.path.getmtime(path)
-            except OSError:
-                continue
-            if age > STAGING_GC_GRACE_SECONDS:
-                shutil.rmtree(path, ignore_errors=True)
-    if changed:
-        # Published files changed the live datasets — evict any cached
-        # reader frames below this index root (see _index_parquet).
-        from query_planner_optimizer_spark.catalog import (
-            invalidate_reader_caches,
-        )
-
-        invalidate_reader_caches(index_dir)
-
-
-def _data_files(path: str) -> list[str]:
-    return [f for f in os.listdir(path)
-            if not f.startswith(("_", "."))]
-
-
 def build_dedup_index(
     df: DataFrame,
     index_dir: str,
@@ -398,7 +270,7 @@ def build_dedup_index(
     ``mode="append"`` is how :func:`append_shard_to_index` folds a
     processed shard in. Appends are CRASH-SAFE: all three datasets are
     staged completely, then published through a marker file with
-    per-file renames — :func:`repair_index` (run by every entry point)
+    per-file renames — ``indexstore.repair`` (run by every entry point)
     completes a torn publish idempotently, so the index never serves a
     shard whose bands arrived but whose digests didn't.
     """
@@ -408,7 +280,7 @@ def build_dedup_index(
         F.sha2(F.col("text"), 256).alias("content_hash"), F.col("doc_id")
     )
     if mode == "append":
-        repair_index(index_dir)
+        indexstore.repair(index_dir)
         _validate_append_params(index_dir, n=n, k=k, bands=bands,
                                 portable=portable,
                                 bucket_bands=bucket_bands)
@@ -430,10 +302,11 @@ def build_dedup_index(
                 f"{f.name} {f.dataType.simpleString()}"
                 for f in bands_df.schema.fields
             )
-            with open(_bucketspec_path(index_dir), "w") as f:
-                json.dump({"buckets": bucket_bands,
-                           "cols": ["band", "bsig"],
-                           "schema_ddl": schema_ddl}, f)
+            indexstore.write_atomic(
+                _bucketspec_path(index_dir),
+                json.dumps({"buckets": bucket_bands,
+                            "cols": ["band", "bsig"],
+                            "schema_ddl": schema_ddl}))
         else:
             if os.path.exists(_bucketspec_path(index_dir)):
                 # overwrite rebuild back to the plain layout: drop the
@@ -452,13 +325,10 @@ def build_dedup_index(
     digests_df.write.mode(mode).parquet(os.path.join(index_dir, "digests"))
     # Record the signature params so future appends can be validated
     # against the layout they must match (see _validate_append_params).
-    tmp = _indexspec_path(index_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"n": n, "k": k, "bands": bands, "portable": portable}, f)
-    os.replace(tmp, _indexspec_path(index_dir))
-    from query_planner_optimizer_spark.catalog import invalidate_reader_caches
-
-    invalidate_reader_caches(index_dir)
+    indexstore.write_atomic(
+        _indexspec_path(index_dir),
+        json.dumps({"n": n, "k": k, "bands": bands, "portable": portable}))
+    catalog.invalidate_reader_caches(index_dir)
 
 
 def _staged_append(
@@ -469,46 +339,42 @@ def _staged_append(
     bands: int,
     portable: bool,
 ) -> None:
-    """Crash-safe shard append: stage bands/shingles/digests completely
-    under ``_staging_<token>/``, write the ``_pending_<token>.json``
-    marker (the commit point), then publish via :func:`repair_index`'s
-    idempotent per-file renames. If the live index is bucketed, the
-    staged bands are written with the SAME bucket spec (bucket ids are
-    carried in the file names, so renamed files keep their buckets)."""
+    """Crash-safe shard append: stage bands/shingles/digests completely,
+    then publish them through ``indexstore.staged_append``. If the live
+    index is bucketed, the staged bands are written with the SAME bucket
+    spec (bucket ids are carried in the file names, so renamed files
+    keep their buckets)."""
     spark = ds.sparkSession
-    token = uuid.uuid4().hex[:12]
-    stg_name = f"_staging_{token}"
-    stg_root = os.path.join(index_dir, stg_name)
     spec = _load_bucketspec(index_dir)
-    ds = ds.persist()
-    try:
-        ds.write.mode("overwrite").parquet(os.path.join(stg_root, "shingles"))
-        bands_df = banded_signature_frame(ds, k, bands, portable=portable)
-        if spec is not None:
-            stg_tbl = f"{_bands_table_name(index_dir)}_stg_{token}"
-            _write_bands_bucketed(
-                bands_df, index_dir, os.path.join(stg_root, "bands"),
-                spec["buckets"], table_name=stg_tbl)
-            spark.sql(f"DROP TABLE {stg_tbl}")
-        else:
-            (
-                bands_df.repartition("band", "bsig")
-                .sortWithinPartitions("band", "bsig")
-                .write.mode("overwrite")
-                .parquet(os.path.join(stg_root, "bands"))
-            )
-    finally:
-        ds.unpersist()
-    digests_df.write.mode("overwrite").parquet(
-        os.path.join(stg_root, "digests"))
-    files = {name: _data_files(os.path.join(stg_root, name))
-             for name in ("shingles", "bands", "digests")}
-    marker = os.path.join(index_dir, f"_pending_{token}.json")
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"staging": stg_name, "files": files}, f)
-    os.replace(tmp, marker)  # commit point
-    repair_index(index_dir)
+
+    def write(stg_root: str) -> None:
+        persisted = ds.persist()
+        try:
+            persisted.write.mode("overwrite").parquet(
+                os.path.join(stg_root, "shingles"))
+            bands_df = banded_signature_frame(persisted, k, bands,
+                                              portable=portable)
+            if spec is not None:
+                stg_tbl = (_bands_table_name(index_dir)
+                           + os.path.basename(stg_root))
+                _write_bands_bucketed(
+                    bands_df, index_dir, os.path.join(stg_root, "bands"),
+                    spec["buckets"], table_name=stg_tbl)
+                spark.sql(f"DROP TABLE {stg_tbl}")
+            else:
+                (
+                    bands_df.repartition("band", "bsig")
+                    .sortWithinPartitions("band", "bsig")
+                    .write.mode("overwrite")
+                    .parquet(os.path.join(stg_root, "bands"))
+                )
+        finally:
+            persisted.unpersist()
+        digests_df.write.mode("overwrite").parquet(
+            os.path.join(stg_root, "digests"))
+
+    indexstore.staged_append(index_dir, write,
+                             ("shingles", "bands", "digests"))
 
 
 def incremental_minhash_pairs(
@@ -551,7 +417,7 @@ def incremental_minhash_pairs(
     still holding the previous call's un-materialized result simply
     recomputes the (shard-sized) lineage.
     """
-    repair_index(index_dir)
+    indexstore.repair(index_dir)
     named = shard.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     )
@@ -569,7 +435,7 @@ def incremental_minhash_pairs(
     if not broadcast_shard and spec is not None:
         idx = spark.table(_ensure_bands_table(spark, index_dir, spec))
     else:
-        idx = _index_parquet(spark, index_dir, "bands")
+        idx = indexstore.reader(spark, index_dir, "bands")
     cand = (
         idx.alias("c")
         .join(
@@ -583,7 +449,7 @@ def incremental_minhash_pairs(
         )
         .distinct()
     )
-    ds_c = _index_parquet(spark, index_dir, "shingles")
+    ds_c = indexstore.reader(spark, index_dir, "shingles")
     shard_side = F.broadcast(ds_s) if broadcast_shard else ds_s
     return verify_candidate_pairs(
         cand, ds_c, shard_side, threshold, a_col="corpus_id", b_col="shard_id"
@@ -606,12 +472,12 @@ def incremental_exact_dups(
     ``digests/`` — the corpus side streams through one map-side join,
     then a candidate-proportional min-aggregation picks the keeper.
     """
-    repair_index(index_dir)
+    indexstore.repair(index_dir)
     sh = F.broadcast(shard.select(
         F.sha2(F.col(text_col), 256).alias("content_hash"),
         F.col(id_col).alias("shard_id"),
     ))
-    idx = _index_parquet(spark, index_dir, "digests")
+    idx = indexstore.reader(spark, index_dir, "digests")
     return (
         idx.join(sh, "content_hash")
         .groupBy("shard_id", "content_hash")
@@ -673,7 +539,7 @@ def incremental_clusters(
     shard's shingles; the only corpus-proportional cost is one scan
     of ``shingles/``. Old clusters enter as star edges (diameter ≤ 2),
     so CC converges in O(1) extra rounds regardless of corpus size."""
-    repair_index(index_dir)
+    indexstore.repair(index_dir)
     named = shard.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     ds_s = _doc_shingle_hashes(named, "doc_id", "text", n,
@@ -683,7 +549,7 @@ def incremental_clusters(
             F.col("doc_id").alias("s_doc"), F.explode("hs").alias("h")))
         sz_s = F.broadcast(ds_s.select(
             F.col("doc_id").alias("s_doc"), F.size("hs").alias("sz_s")))
-        ds_c = _index_parquet(spark, index_dir, "shingles")
+        ds_c = indexstore.reader(spark, index_dir, "shingles")
         sh_c = ds_c.select(
             F.col("doc_id").alias("c_doc"), F.explode("hs").alias("h"))
         sz_c = ds_c.select(
@@ -797,7 +663,7 @@ def compact_index(spark: SparkSession, index_dir: str,
     next compact/repair entry by :func:`_repair_swap_leftovers`, which
     restores the ``.old`` copy or finishes the cleanup instead of
     silently skipping the dataset."""
-    repair_index(index_dir)
+    indexstore.repair(index_dir)
     spec = _load_bucketspec(index_dir)
     for name, cluster in (("bands", ("band", "bsig")),
                           ("shingles", ()), ("digests", ())):
@@ -834,9 +700,7 @@ def compact_index(spark: SparkSession, index_dir: str,
         os.rename(src, old)
         os.rename(staged, src)
         shutil.rmtree(old)
-    from query_planner_optimizer_spark.catalog import invalidate_reader_caches
-
-    invalidate_reader_caches(index_dir)
+    catalog.invalidate_reader_caches(index_dir)
 
 
 def daily_ingest(
@@ -935,10 +799,10 @@ def index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
     recomputes every cell from the corpus definition in SQL, so this
     doubles as an end-to-end check that the index write path loses /
     duplicates nothing."""
-    repair_index(index_dir)
-    bands = _index_parquet(spark, index_dir, "bands")
-    shingles = _index_parquet(spark, index_dir, "shingles")
-    digests = _index_parquet(spark, index_dir, "digests")
+    indexstore.repair(index_dir)
+    bands = indexstore.reader(spark, index_dir, "bands")
+    shingles = indexstore.reader(spark, index_dir, "shingles")
+    digests = indexstore.reader(spark, index_dir, "digests")
     b = bands.agg(
         F.count(F.lit(1)).alias("band_rows"),
         F.countDistinct("band", "bsig").alias("distinct_buckets"),
@@ -1094,7 +958,7 @@ def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + RECRAWL_SHADOW).alias("doc_id"), "text"
     )
     shard = docs.filter(_shard_pred()).unionByName(recrawl)
-    digests = _index_parquet(spark, idx, "digests")
+    digests = indexstore.reader(spark, idx, "digests")
     return ingest_gate(shard, digests)
 
 

@@ -39,6 +39,7 @@ from query_planner_optimizer_spark.functions.rounding import (
     sql_round_half_up as _rs,
 )
 from query_planner_optimizer_spark.functions.vector import as_double_array, dot
+from query_planner_optimizer_spark.operators import indexstore
 
 DEFAULT_K = 10
 DEFAULT_NUM_QUERIES = 20
@@ -648,34 +649,16 @@ def ivf_topk(
     )
 
 
-def _ann_current_path(index_dir: str) -> str:
-    return os.path.join(index_dir, "CURRENT")
-
-
-def _ann_version_dir(index_dir: str) -> str:
-    cur = _ann_current_path(index_dir)
-    with open(cur) as f:
-        version = f.read().strip()
-    return os.path.join(index_dir, version)
-
-
 def ann_paths(index_dir: str) -> tuple[str, str]:
     """Resolve the live (centroids, postings) dataset paths through the
-    ``CURRENT`` version pointer. The pointer is one small file whose
-    content is the active version directory name; maintenance jobs
-    (:func:`retrain_ann_index`) publish a complete NEW version and flip
-    the pointer with a single atomic ``os.replace`` — readers see
-    either the old index or the new one, never centroids from one
-    generation paired with postings from another."""
-    vdir = _ann_version_dir(index_dir)
+    ``CURRENT`` version pointer, completing any torn append first.
+    Maintenance jobs (:func:`retrain_ann_index`) publish a complete NEW
+    version and flip the pointer atomically — readers see either the
+    old index or the new one, never centroids from one generation
+    paired with postings from another (operators/indexstore.py holds
+    the crash and concurrency contract)."""
+    vdir = indexstore.live_version_dir(index_dir)
     return os.path.join(vdir, "centroids"), os.path.join(vdir, "postings")
-
-
-def _flip_ann_current(index_dir: str, version: str) -> None:
-    tmp = _ann_current_path(index_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(version)
-    os.replace(tmp, _ann_current_path(index_dir))  # the commit point
 
 
 def _write_ann_version(
@@ -690,10 +673,7 @@ def _write_ann_version(
     probing ``nprobe`` of ``nlist`` cells reads ~nprobe/nlist of the
     postings bytes (PartitionFilters on the parquet scan, plan-audited
     in tests) instead of every posting."""
-    import uuid
-
-    version = f"v_{uuid.uuid4().hex[:12]}"
-    vdir = os.path.join(index_dir, version)
+    vdir = indexstore.new_version_dir(index_dir)
     _centroid_frame(spark, cents).write.mode("overwrite").parquet(
         os.path.join(vdir, "centroids"))
     (
@@ -703,26 +683,7 @@ def _write_ann_version(
         .write.mode("overwrite").partitionBy("cell")
         .parquet(os.path.join(vdir, "postings"))
     )
-    return version
-
-
-def _drop_stale_ann_versions(index_dir: str, keep: str,
-                             keep_versions: int = 1) -> None:
-    """Retention for superseded index versions. ``keep_versions=1``
-    (default) removes everything but the live version right after the
-    pointer flip; ``keep_versions=N`` retains the N-1 most recent
-    superseded versions (by mtime) so in-flight readers that resolved
-    their paths pre-flip never race a deletion — the production
-    deferred-deletion policy (a retention choice, not a correctness
-    one: the CURRENT pointer is already atomic)."""
-    import shutil
-
-    stale = [name for name in os.listdir(index_dir)
-             if name.startswith("v_") and name != keep]
-    stale.sort(key=lambda n: os.path.getmtime(os.path.join(index_dir, n)),
-               reverse=True)
-    for name in stale[max(keep_versions - 1, 0):]:
-        shutil.rmtree(os.path.join(index_dir, name), ignore_errors=True)
+    return vdir
 
 
 def build_ann_index(
@@ -733,15 +694,11 @@ def build_ann_index(
     dim: int = 64,
     nlist: int = IVF_NLIST,
     iters: int = IVF_ITERS,
-    keep_versions: int = 1,
 ) -> None:
     """Persist an IVF index: ``centroids/`` (cell, c_vec, c_norm —
     nlist rows) and ``postings/`` (id, _vec, _norm) PARTITIONED BY
     cell, both under a version dir published via the ``CURRENT``
-    pointer (see :func:`ann_paths`). ``keep_versions=N`` retains the
-    N-1 most recent superseded versions after the flip so in-flight
-    readers never race a deletion (same knob as
-    :func:`retrain_ann_index`). The incremental twin of
+    pointer (see :func:`ann_paths`). The incremental twin of
     operators/incremental.py's dedup index: train once over the
     corpus, then every future shard APPENDS assignments
     (:func:`append_to_ann_index`) without re-training or re-reading
@@ -754,13 +711,10 @@ def build_ann_index(
     ).persist()
     try:
         cents = _train_ivf_centroids(base, dim, nlist, iters)
-        version = _write_ann_version(df.sparkSession, base, cents,
-                                     index_dir)
+        vdir = _write_ann_version(df.sparkSession, base, cents, index_dir)
     finally:
         base.unpersist()
-    _flip_ann_current(index_dir, version)
-    _drop_stale_ann_versions(index_dir, keep=version,
-                             keep_versions=keep_versions)
+    indexstore.publish_version(index_dir, vdir)
 
 
 #: Per-process memo of collected centroid matrices, keyed on the
@@ -771,7 +725,7 @@ def build_ann_index(
 #: state (what a real ANN server holds resident), not query-result
 #: caching; each entry is nlist×dim doubles (~8 KB at the defaults).
 #: r16 (ADVICE): LRU-bounded — entries for version dirs deleted by
-#: ``_drop_stale_ann_versions`` otherwise linger forever in a
+#: ``indexstore.publish_version`` otherwise linger forever in a
 #: long-lived serving process that cycles retrain/compaction versions.
 _CENTROID_CACHE: "OrderedDict[str, list[list[float]]]" = OrderedDict()
 _CENTROID_CACHE_CAP = 16
@@ -779,7 +733,9 @@ _CENTROID_CACHE_CAP = 16
 
 def _read_centroids(spark: SparkSession, index_dir: str) -> list[list[float]]:
     # Bounded collect: nlist rows (same class as the training seeds).
-    cents_path, _ = ann_paths(index_dir)
+    # Centroids never change inside a version, so no repair is needed.
+    cents_path = os.path.join(indexstore.current_version_dir(index_dir),
+                              "centroids")
     key = os.path.abspath(cents_path)
     hit = _CENTROID_CACHE.get(key)
     if hit is not None:
@@ -803,19 +759,20 @@ def append_to_ann_index(
     """Assign a NEW shard's vectors to the EXISTING centroids (no
     re-train — the standard daily-ingest move; centroid drift is
     accepted until a periodic full rebuild) and append the postings
-    into the current version's cell partitions. Work is
+    into the current version's cell partitions through the staged
+    append (a crash mid-write never serves a partial shard). Work is
     shard-proportional: the corpus postings are never read."""
+    vdir = indexstore.live_version_dir(index_dir)
     cents = _read_centroids(spark, index_dir)
-    _, posts_path = ann_paths(index_dir)
     base = with_norm(shard, vec_col).select(
         F.col(id_col).alias("id"), "_vec", "_norm"
     )
-    (
-        _assigned_cells(base, cents)
-        .select("cell", "id", "_vec", "_norm")
-        .write.mode("append").partitionBy("cell")
-        .parquet(posts_path)
-    )
+    posts = _assigned_cells(base, cents).select("cell", "id", "_vec", "_norm")
+    indexstore.staged_append(
+        vdir,
+        lambda stg_root: posts.write.mode("overwrite").partitionBy("cell")
+        .parquet(os.path.join(stg_root, "postings")),
+        ("postings",))
 
 
 def ann_index_topk(
@@ -878,11 +835,7 @@ def ann_index_topk(
     )
 
 
-def compact_ann_index(
-    spark: SparkSession,
-    index_dir: str,
-    keep_versions: int = 1,
-) -> None:
+def compact_ann_index(spark: SparkSession, index_dir: str) -> None:
     """Parquet maintenance for an append-grown flat index: daily
     appends land one file set per touched cell partition; compaction
     rewrites the live version into a FRESH version dir (postings
@@ -893,11 +846,8 @@ def compact_ann_index(
     unchanged: compaction is layout-only, never a retrain (that is
     :func:`retrain_ann_index`'s job). Probe equality before/after is
     pinned in tests."""
-    import uuid
-
     cents_path, posts_path = ann_paths(index_dir)
-    version = f"v_{uuid.uuid4().hex[:12]}"
-    vdir = os.path.join(index_dir, version)
+    vdir = indexstore.new_version_dir(index_dir)
     spark.read.parquet(cents_path).coalesce(1).write.mode(
         "overwrite").parquet(os.path.join(vdir, "centroids"))
     (
@@ -906,9 +856,7 @@ def compact_ann_index(
         .write.mode("overwrite").partitionBy("cell")
         .parquet(os.path.join(vdir, "postings"))
     )
-    _flip_ann_current(index_dir, version)
-    _drop_stale_ann_versions(index_dir, keep=version,
-                             keep_versions=keep_versions)
+    indexstore.publish_version(index_dir, vdir)
 
 
 def retrain_ann_index(
@@ -917,7 +865,6 @@ def retrain_ann_index(
     dim: int = 64,
     nlist: int = IVF_NLIST,
     iters: int = IVF_ITERS,
-    keep_versions: int = 1,
 ) -> None:
     """Periodic index maintenance: re-train centroids over EVERYTHING
     currently indexed (original corpus + every appended shard) and
@@ -929,27 +876,19 @@ def retrain_ann_index(
     ``CURRENT`` is flipped with one ``os.replace`` — a crash anywhere
     leaves the pointer at a complete old version or a complete new
     one, never new centroids paired with postings whose cells came
-    from the old centroids. The old version is removed after the flip
-    by default; pass ``keep_versions=N`` to retain the N-1 most recent
-    superseded versions so in-flight readers that resolved their paths
-    pre-flip never race a deletion (a retention policy, not a
-    correctness one).
+    from the old centroids. The old version is removed after the flip.
     Full-probe results are INVARIANT under retrain (both before and
     after equal brute force over the same vectors — pinned in pytest);
-    what changes is pruned-probe quality, which is the point.
-    ``keep_versions=N`` retains the N-1 most recent superseded
-    versions for in-flight readers (deferred deletion)."""
+    what changes is pruned-probe quality, which is the point."""
     _, posts_path = ann_paths(index_dir)
     base = spark.read.parquet(posts_path).select(
         "id", "_vec", "_norm").persist()
     try:
         cents = _train_ivf_centroids(base, dim, nlist, iters)
-        version = _write_ann_version(spark, base, cents, index_dir)
+        vdir = _write_ann_version(spark, base, cents, index_dir)
     finally:
         base.unpersist()
-    _flip_ann_current(index_dir, version)
-    _drop_stale_ann_versions(index_dir, keep=version,
-                             keep_versions=keep_versions)
+    indexstore.publish_version(index_dir, vdir)
 
 
 PQ_M = 8        #: subspaces (dim 64 → 8 dims per subvector)
@@ -1471,13 +1410,6 @@ def _pack_codes(codes: DataFrame) -> DataFrame:
     )
 
 
-def _ivfpq_meta_path(index_dir: str) -> str:
-    # Legacy top-level location (pre-r15 indexes only); current builds
-    # commit META.json INSIDE each version dir so geometry and codes
-    # flip together with the single CURRENT replace.
-    return os.path.join(index_dir, "META.json")
-
-
 def _write_ivfpq_version(
     spark: SparkSession,
     cents: list[list[float]],
@@ -1487,10 +1419,7 @@ def _write_ivfpq_version(
     index_dir: str,
     meta: dict,
 ) -> str:
-    import uuid
-
-    version = f"v_{uuid.uuid4().hex[:12]}"
-    vdir = os.path.join(index_dir, version)
+    vdir = indexstore.new_version_dir(index_dir)
     # The three datasets land in disjoint subdirs — write the two tiny
     # ones from side threads while the main thread runs the codes job
     # (guide §2.6; versioning makes partial writes invisible until the
@@ -1516,11 +1445,9 @@ def _write_ivfpq_version(
     # META.json lives in the version dir: a rebuild that changes
     # (dim, m, ks, nlist) publishes geometry and codes in the SAME
     # CURRENT flip — no window where new meta decodes old codes.
-    tmp = os.path.join(vdir, "META.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(vdir, "META.json"))
-    return version
+    indexstore.write_atomic(os.path.join(vdir, "META.json"),
+                            json.dumps(meta))
+    return vdir
 
 
 def build_ivfpq_index(
@@ -1534,7 +1461,6 @@ def build_ivfpq_index(
     ks: int = PQ_KS,
     ivf_iters: int = IVF_ITERS,
     pq_iters: int = PQ_ITERS,
-    keep_versions: int = 1,
 ) -> None:
     """Persist the IVF-PQ serving index under a CURRENT-pointer version
     dir: ``centroids/`` (nlist rows), ``books/`` (m·ks codebook rows),
@@ -1542,10 +1468,7 @@ def build_ivfpq_index(
     partition-prune to the probed cells exactly like the flat index.
     ``META.json`` records (dim, m, ks, nlist) INSIDE the version dir,
     so a geometry-changing rebuild commits meta + codes atomically with
-    the one CURRENT flip. ``keep_versions=N`` retains the N-1 most
-    recent superseded versions so in-flight readers that resolved
-    their paths pre-flip never race a deletion (same deferred-deletion
-    policy as :func:`retrain_ann_index`)."""
+    the one CURRENT flip."""
     spark = df.sparkSession
     d_sub = dim // m
     if d_sub * m != dim:
@@ -1575,15 +1498,13 @@ def build_ivfpq_index(
             cents = f_cents.result()
             books, codes, ks = f_books.result()
         cells = _assigned_cells(base, cents).select("id", "cell")
-        version = _write_ivfpq_version(
+        vdir = _write_ivfpq_version(
             spark, cents, books, cells, _pack_codes(codes), index_dir,
             meta={"dim": dim, "m": m, "ks": ks, "nlist": nlist})
     finally:
         unit.unpersist()
         base.unpersist()
-    _flip_ann_current(index_dir, version)
-    _drop_stale_ann_versions(index_dir, keep=version,
-                             keep_versions=keep_versions)
+    indexstore.publish_version(index_dir, vdir)
 
 
 def _read_books(spark: SparkSession, vdir: str) -> DataFrame:
@@ -1599,12 +1520,10 @@ def _read_books(spark: SparkSession, vdir: str) -> DataFrame:
 
 
 def _load_ivfpq_meta(index_dir: str) -> dict:
-    """Resolve META through the CURRENT version dir (meta commits with
-    the codes it describes); falls back to the legacy top-level
-    location for pre-r15 indexes."""
-    vmeta = os.path.join(_ann_version_dir(index_dir), "META.json")
-    path = vmeta if os.path.exists(vmeta) else _ivfpq_meta_path(index_dir)
-    with open(path) as f:
+    """META of the CURRENT version dir (meta commits with the codes it
+    describes)."""
+    with open(os.path.join(indexstore.current_version_dir(index_dir),
+                           "META.json")) as f:
         return json.load(f)
 
 
@@ -1618,10 +1537,10 @@ def append_to_ivfpq_index(
     """Encode a NEW shard against the FROZEN centroids and codebooks
     (no re-train — codebook drift is accepted until a periodic rebuild
     from the store) and append its packed codes into the current
-    version's cell partitions. Shard-proportional: corpus codes are
-    never read."""
+    version's cell partitions through the staged append.
+    Shard-proportional: corpus codes are never read."""
+    vdir = indexstore.live_version_dir(index_dir)
     meta = _load_ivfpq_meta(index_dir)
-    vdir = _ann_version_dir(index_dir)
     cents = _read_centroids(spark, index_dir)
     books = _read_books(spark, vdir)
     d_sub = meta["dim"] // meta["m"]
@@ -1632,30 +1551,23 @@ def append_to_ivfpq_index(
     cells = _assigned_cells(base, cents).select("id", "cell")
     packed = _pack_codes(
         _pq_encode(_pq_subvectors(unit, meta["m"], d_sub), books))
-    (
-        cells.join(packed, "id")
-        .select("cell", "id", "codes")
-        .write.mode("append").partitionBy("cell")
-        .parquet(os.path.join(vdir, "codes"))
-    )
+    codes = cells.join(packed, "id").select("cell", "id", "codes")
+    indexstore.staged_append(
+        vdir,
+        lambda stg_root: codes.write.mode("overwrite").partitionBy("cell")
+        .parquet(os.path.join(stg_root, "codes")),
+        ("codes",))
 
 
-def compact_ivfpq_index(
-    spark: SparkSession,
-    index_dir: str,
-    keep_versions: int = 1,
-) -> None:
+def compact_ivfpq_index(spark: SparkSession, index_dir: str) -> None:
     """IVF-PQ twin of :func:`compact_ann_index`: re-cluster the
     append-grown ``codes/`` one task per cell into a fresh version dir
     (centroids, codebooks, and META copied unchanged — layout-only,
     never a re-train) and flip CURRENT atomically. Serving equality
     before/after pinned in tests."""
-    import uuid
-
+    vdir = indexstore.live_version_dir(index_dir)
     meta = _load_ivfpq_meta(index_dir)
-    vdir = _ann_version_dir(index_dir)
-    version = f"v_{uuid.uuid4().hex[:12]}"
-    new_vdir = os.path.join(index_dir, version)
+    new_vdir = indexstore.new_version_dir(index_dir)
     for small in ("centroids", "books"):
         spark.read.parquet(os.path.join(vdir, small)).coalesce(1).write \
             .mode("overwrite").parquet(os.path.join(new_vdir, small))
@@ -1665,13 +1577,9 @@ def compact_ivfpq_index(
         .write.mode("overwrite").partitionBy("cell")
         .parquet(os.path.join(new_vdir, "codes"))
     )
-    tmp = os.path.join(new_vdir, "META.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(new_vdir, "META.json"))
-    _flip_ann_current(index_dir, version)
-    _drop_stale_ann_versions(index_dir, keep=version,
-                             keep_versions=keep_versions)
+    indexstore.write_atomic(os.path.join(new_vdir, "META.json"),
+                            json.dumps(meta))
+    indexstore.publish_version(index_dir, new_vdir)
 
 
 def ivfpq_index_topk(
@@ -1697,8 +1605,8 @@ def ivfpq_index_topk(
     With ``nprobe == nlist`` and an unbounded shortlist the refine
     ranks every vector exactly: provably brute force, the invariant
     the driver entry's oracle states across a build + append sequence."""
+    vdir = indexstore.live_version_dir(index_dir)
     meta = _load_ivfpq_meta(index_dir)
-    vdir = _ann_version_dir(index_dir)
     cents = _read_centroids(spark, index_dir)
     books = _read_books(spark, vdir)
     d_sub = meta["dim"] // meta["m"]

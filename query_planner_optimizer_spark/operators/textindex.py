@@ -11,8 +11,7 @@ no text-retrieval surface at all; additive, like the dedup/ANN
 families.)
 
 Layout (one complete version per ``v_*`` dir, published by flipping
-the one-line ``CURRENT`` pointer — same atomic-publish discipline as
-:func:`similarity.ann_paths`):
+the one-line ``CURRENT`` pointer; see operators/indexstore.py):
 
 - ``postings/`` — (term, doc_id, tf, dl) PARTITIONED BY ``tbucket``
   (= hash(term) mod n_buckets). Term-bucket partitioning rather than
@@ -43,27 +42,24 @@ Index size: postings are O(distinct (doc, term)) rows of
 (string, long, int, int) — the same order as the compressed text, the
 standard inverted-index trade (cf. the dedup index's ``shingles/``).
 
-Crash discipline: rebuilds publish whole version dirs via the CURRENT
-flip; appends stage postings + stats under ``_staging_<token>/`` inside
-the version dir and publish through a ``_pending_*.json`` marker with
-per-file renames — :func:`repair_text_index` (run by every entry
-point) completes a torn publish idempotently and garbage-collects
-marker-less staging only after a grace period (same single-writer /
-many-readers contract as operators/incremental.py).
+Crash discipline: rebuilds and compactions publish whole version dirs
+via the CURRENT flip; appends stage postings + stats and publish them
+into the live version dir through the shared staged-append protocol,
+and every entry point repairs first. The crash and concurrency
+contract is described once, in operators/indexstore.py.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from query_planner_optimizer_spark.functions.textexpr import tokens
+from query_planner_optimizer_spark.operators import indexstore
 from query_planner_optimizer_spark.operators.relevance import (
     BM25_B,
     BM25_K1,
@@ -71,21 +67,13 @@ from query_planner_optimizer_spark.operators.relevance import (
     _load_documents,
     _SQL_TOKS,
 )
-from query_planner_optimizer_spark.operators.similarity import (
-    _ann_version_dir,
-    _drop_stale_ann_versions,
-    _flip_ann_current,
+from query_planner_optimizer_spark.streaming.maintenance import (
+    exactly_once_stream,
 )
 
 #: Fixed partition-dir count for ``postings/`` regardless of vocabulary
 #: size; probes prune to the query terms' buckets.
 TEXT_INDEX_BUCKETS = 16
-
-#: Same GC grace rationale as incremental.STAGING_GC_GRACE_SECONDS: a
-#: marker-less staging dir younger than this may be another process's
-#: append mid-staging — age is the only way to tell it from crash
-#: garbage.
-STAGING_GC_GRACE_SECONDS = 3600.0
 
 
 def _bucket_col(term_col, n_buckets: int):
@@ -132,8 +120,24 @@ def _shard_frames(
 
 
 def _load_text_meta(index_dir: str) -> dict:
-    with open(os.path.join(_ann_version_dir(index_dir), "META.json")) as f:
+    with open(os.path.join(indexstore.current_version_dir(index_dir),
+                           "META.json")) as f:
         return json.load(f)
+
+
+def _write_datasets(root: str, postings: DataFrame,
+                    stats: DataFrame) -> None:
+    """``postings/`` (one task per bucket, sorted by term) and
+    ``stats/`` (one file) under ``root`` — a version dir or a staging
+    dir."""
+    (
+        postings.repartition("tbucket")
+        .sortWithinPartitions("term", "doc_id")
+        .write.mode("overwrite").partitionBy("tbucket")
+        .parquet(os.path.join(root, "postings"))
+    )
+    stats.coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(root, "stats"))
 
 
 def build_text_index(
@@ -142,7 +146,6 @@ def build_text_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int = TEXT_INDEX_BUCKETS,
-    keep_versions: int = 1,
     positions: bool = False,
 ) -> None:
     """One corpus pass → a complete index version (postings + stats
@@ -154,105 +157,12 @@ def build_text_index(
     positions-free index loudly."""
     postings, delta = _shard_frames(docs, id_col, text_col, n_buckets,
                                     positions=positions)
-    version = f"v_{uuid.uuid4().hex[:12]}"
-    vdir = os.path.join(index_dir, version)
-    (
-        postings.repartition("tbucket")
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite").partitionBy("tbucket")
-        .parquet(os.path.join(vdir, "postings"))
-    )
-    delta.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(vdir, "stats"))
-    tmp = os.path.join(vdir, "META.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"n_buckets": n_buckets, "positions": positions}, f)
-    os.replace(tmp, os.path.join(vdir, "META.json"))
-    _flip_ann_current(index_dir, version)
-    _drop_stale_ann_versions(index_dir, keep=version,
-                             keep_versions=keep_versions)
-
-
-def _rel_data_files(root: str) -> list[str]:
-    """Relative paths of data files under ``root``, recursing through
-    partition subdirs; `_`/`.`-prefixed names (markers, _SUCCESS,
-    CRC turds) are skipped at every level."""
-    out: list[str] = []
-    for cur, dirs, files in os.walk(root):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for fn in files:
-            if fn.startswith(("_", ".")):
-                continue
-            out.append(os.path.relpath(os.path.join(cur, fn), root))
-    return sorted(out)
-
-
-def repair_text_index(index_dir: str) -> None:
-    """Version-scoped twin of :func:`incremental.repair_index`:
-    complete any ``_pending_*`` marker in the CURRENT version dir with
-    idempotent per-file renames (partition subdirs created as needed),
-    then GC marker-less staging dirs older than the grace window.
-    Tolerates a concurrent repairer at every step; appends themselves
-    are single-writer (see module docstring)."""
-    try:
-        vdir = _ann_version_dir(index_dir)
-    except FileNotFoundError:
-        return  # no CURRENT yet: nothing published, nothing to repair
-    import time
-
-    changed = False
-    for name in sorted(os.listdir(vdir)):
-        if not (name.startswith("_pending_") and name.endswith(".json")):
-            continue
-        marker = os.path.join(vdir, name)
-        try:
-            with open(marker) as f:
-                plan = json.load(f)
-        except FileNotFoundError:
-            continue  # concurrent repairer finished it
-        stg_root = os.path.join(vdir, plan["staging"])
-        for dataset, rels in plan["files"].items():
-            live = os.path.join(vdir, dataset)
-            for rel in rels:
-                dst = os.path.join(live, rel)
-                if os.path.exists(dst):
-                    continue
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                src = os.path.join(stg_root, dataset, rel)
-                try:
-                    os.rename(src, dst)
-                except FileNotFoundError:
-                    if os.path.exists(dst):
-                        continue
-                    raise RuntimeError(
-                        f"torn append in {vdir}: {dataset}/{rel} is in "
-                        f"neither staging nor the live dataset — the "
-                        f"index needs a rebuild"
-                    ) from None
-        shutil.rmtree(stg_root, ignore_errors=True)
-        try:
-            os.remove(marker)
-        except FileNotFoundError:
-            pass
-        changed = True
-    now = time.time()
-    for name in os.listdir(vdir):
-        if name.startswith("_staging_"):
-            path = os.path.join(vdir, name)
-            try:
-                age = now - os.path.getmtime(path)
-            except OSError:
-                continue
-            if age > STAGING_GC_GRACE_SECONDS:
-                shutil.rmtree(path, ignore_errors=True)
-    if changed:
-        # Published files changed the live datasets — evict the cached
-        # reader frames below this version dir (see _index_frame).
-        from query_planner_optimizer_spark.catalog import (
-            invalidate_reader_caches,
-        )
-
-        invalidate_reader_caches(vdir)
+    vdir = indexstore.new_version_dir(index_dir)
+    _write_datasets(vdir, postings, delta)
+    indexstore.write_atomic(
+        os.path.join(vdir, "META.json"),
+        json.dumps({"n_buckets": n_buckets, "positions": positions}))
+    indexstore.publish_version(index_dir, vdir)
 
 
 def append_to_text_index(
@@ -269,31 +179,14 @@ def append_to_text_index(
     postings whose stats delta didn't land (BM25's N/avgdl would
     silently shrink). Served scores after an append are EXACTLY a full
     rebuild's (see module docstring)."""
-    repair_text_index(index_dir)
+    vdir = indexstore.live_version_dir(index_dir)
     meta = _load_text_meta(index_dir)
-    vdir = _ann_version_dir(index_dir)
     postings, delta = _shard_frames(shard, id_col, text_col,
                                     meta["n_buckets"],
                                     positions=meta.get("positions", False))
-    token = uuid.uuid4().hex[:12]
-    stg_name = f"_staging_{token}"
-    stg_root = os.path.join(vdir, stg_name)
-    (
-        postings.repartition("tbucket")
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite").partitionBy("tbucket")
-        .parquet(os.path.join(stg_root, "postings"))
-    )
-    delta.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stg_root, "stats"))
-    files = {name: _rel_data_files(os.path.join(stg_root, name))
-             for name in ("postings", "stats")}
-    marker = os.path.join(vdir, f"_pending_{token}.json")
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"staging": stg_name, "files": files}, f)
-    os.replace(tmp, marker)  # commit point
-    repair_text_index(index_dir)
+    indexstore.staged_append(
+        vdir, lambda stg_root: _write_datasets(stg_root, postings, delta),
+        ("postings", "stats"))
 
 
 #: Memo for :func:`_term_buckets`: xxhash64 of a string literal is a
@@ -320,26 +213,6 @@ def _term_buckets(spark: SparkSession, terms: list[str],
     return list(out)
 
 
-def _index_frame(spark: SparkSession, vdir: str, name: str):
-    """Session-cached reader frame for one text-index dataset (r15,
-    guide §5: repeat probes paid a driver file-listing + schema read
-    per dataset per call). In-process appends publish through
-    :func:`repair_text_index`, which invalidates the cache below the
-    version dir whenever it changes files; rebuilds/compactions write
-    a fresh version dir (new cache key). The mutation token (r16,
-    ADVICE) additionally catches CROSS-PROCESS appends into the same
-    version dir, whose publish leaves no pending marker behind for
-    this process to repair: one dir stat per probe, re-list only on
-    actual change."""
-    from query_planner_optimizer_spark.catalog import (
-        cached_parquet,
-        dir_mutation_token,
-    )
-
-    path = os.path.join(vdir, name)
-    return cached_parquet(spark, path, token=dir_mutation_token(path))
-
-
 def bm25_index_scores(
     spark: SparkSession,
     index_dir: str,
@@ -354,18 +227,17 @@ def bm25_index_scores(
     the matched postings, N/avgdl from summing the tiny stats deltas.
     Same output contract as :func:`relevance.bm25_scores`:
     (doc_id, n_matched_terms, score), all matching docs."""
-    repair_text_index(index_dir)
+    vdir = indexstore.live_version_dir(index_dir)
     meta = _load_text_meta(index_dir)
-    vdir = _ann_version_dir(index_dir)
     terms = list(terms)
     buckets = _term_buckets(spark, terms, meta["n_buckets"])
     posts = (
-        _index_frame(spark, vdir, "postings")
+        indexstore.reader(spark, vdir, "postings")
         .filter(F.col("tbucket").isin(buckets)
                 & F.col("term").isin(terms))
         .select("term", "doc_id", "tf", "dl")
     )
-    stats = _index_frame(spark, vdir, "stats").agg(
+    stats = indexstore.reader(spark, vdir, "stats").agg(
         F.sum("n_docs").cast("long").alias("n_docs"),
         F.sum("sum_dl").cast("long").alias("sum_dl"),
     ).select(
@@ -416,18 +288,17 @@ def tfidf_index_scores(
     layout, both lexical scorers — same pruning shape and output
     contract as :func:`relevance.tfidf_scores`
     ((doc_id, n_matched_terms, score))."""
-    repair_text_index(index_dir)
+    vdir = indexstore.live_version_dir(index_dir)
     meta = _load_text_meta(index_dir)
-    vdir = _ann_version_dir(index_dir)
     terms = list(terms)
     buckets = _term_buckets(spark, terms, meta["n_buckets"])
     posts = (
-        _index_frame(spark, vdir, "postings")
+        indexstore.reader(spark, vdir, "postings")
         .filter(F.col("tbucket").isin(buckets)
                 & F.col("term").isin(terms))
         .select("term", "doc_id", "tf")
     )
-    n_docs = _index_frame(spark, vdir, "stats").agg(
+    n_docs = indexstore.reader(spark, vdir, "stats").agg(
         F.sum("n_docs").cast("long").alias("n_docs"))
     dfreq = posts.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     idf = dfreq.crossJoin(F.broadcast(n_docs)).select(
@@ -484,7 +355,7 @@ def phrase_match(
     candidate-proportional, never corpus-proportional). A unigram
     phrase degenerates to docs-containing-term with n_occurrences =
     tf. Raises on an index built without positions."""
-    repair_text_index(index_dir)
+    vdir = indexstore.live_version_dir(index_dir)
     meta = _load_text_meta(index_dir)
     if not meta.get("positions"):
         raise ValueError(
@@ -495,10 +366,9 @@ def phrase_match(
     phrase = list(phrase)
     if not phrase:
         raise ValueError("empty phrase")
-    vdir = _ann_version_dir(index_dir)
     buckets = _term_buckets(spark, phrase, meta["n_buckets"])
     posts = (
-        _index_frame(spark, vdir, "postings")
+        indexstore.reader(spark, vdir, "postings")
         .filter(F.col("tbucket").isin(buckets)
                 & F.col("term").isin(phrase))
         .select("term", "doc_id", "positions")
@@ -536,7 +406,6 @@ def phrase_match(
 def compact_text_index(
     spark: SparkSession,
     index_dir: str,
-    keep_versions: int = 1,
 ) -> None:
     """Parquet-maintenance job for an append-grown index: every append
     lands one file set per bucket plus one stats-delta row, so a year
@@ -550,31 +419,18 @@ def compact_text_index(
     version untouched; probes never see a half-compacted state.
     Results are bit-identical before/after (pinned in tests) — the
     summed stats row equals the delta sum by integer exactness."""
-    repair_text_index(index_dir)
+    vdir = indexstore.live_version_dir(index_dir)
     meta = _load_text_meta(index_dir)
-    vdir = _ann_version_dir(index_dir)
-    posts = _index_frame(spark, vdir, "postings")
-    stats = _index_frame(spark, vdir, "stats").agg(
+    posts = indexstore.reader(spark, vdir, "postings")
+    stats = indexstore.reader(spark, vdir, "stats").agg(
         F.sum("n_docs").cast("long").alias("n_docs"),
         F.sum("sum_dl").cast("long").alias("sum_dl"),
     )
-    version = f"v_{uuid.uuid4().hex[:12]}"
-    new_vdir = os.path.join(index_dir, version)
-    (
-        posts.repartition("tbucket")
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite").partitionBy("tbucket")
-        .parquet(os.path.join(new_vdir, "postings"))
-    )
-    stats.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(new_vdir, "stats"))
-    tmp = os.path.join(new_vdir, "META.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(new_vdir, "META.json"))
-    _flip_ann_current(index_dir, version)
-    _drop_stale_ann_versions(index_dir, keep=version,
-                             keep_versions=keep_versions)
+    new_vdir = indexstore.new_version_dir(index_dir)
+    _write_datasets(new_vdir, posts, stats)
+    indexstore.write_atomic(os.path.join(new_vdir, "META.json"),
+                            json.dumps(meta))
+    indexstore.publish_version(index_dir, new_vdir)
 
 
 def streaming_text_index_maintenance(
@@ -590,44 +446,20 @@ def streaming_text_index_maintenance(
     """Continuous index maintenance: a ``readStream`` over a landing
     dir of document shards folds each micro-batch into the live index
     via :func:`append_to_text_index` — the deployment shape of daily/
-    hourly corpus ingest (same ``foreachBatch`` + batch-marker
-    discipline as ``streaming/maintenance.streaming_rollup_
-    maintenance``). The marker records the last folded batch id inside
-    the index dir, so a restart after a crash BETWEEN the fold and the
-    checkpoint commit replays the batch as a no-op instead of
-    double-appending (appends are not idempotent by themselves; the
-    marker makes the fold exactly-once). With
-    ``trigger(availableNow=True)`` the run is finite — callers
-    ``awaitTermination`` on the returned query. Single writer, as per
-    the module contract."""
-    marker = os.path.join(index_dir, "_last_text_batch")
-
-    def _last() -> int:
-        if os.path.exists(marker):
-            txt = open(marker).read().strip()
-            return int(txt) if txt else -1
-        return -1
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_id <= _last():
-            return  # already folded + recorded: restart replay no-op
+    hourly corpus ingest, run by the exactly-once runner of
+    streaming/maintenance.py. Its batch marker sits in the index dir,
+    so a restart after a crash BETWEEN the fold and the checkpoint
+    commit replays the batch as a no-op instead of double-appending
+    (appends are not idempotent by themselves). Single writer, as per
+    the indexstore contract."""
+    def fold(batch_df: DataFrame, _batch_id: int) -> None:
         append_to_text_index(spark, batch_df, index_dir,
                              id_col=id_col, text_col=text_col)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, marker)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(landing_dir)
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return exactly_once_stream(
+        spark, landing_dir, schema, checkpoint_dir,
+        os.path.join(index_dir, "_last_text_batch"), fold,
+        max_files_per_trigger)
 
 
 def text_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -636,10 +468,9 @@ def text_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
     The driver entry's oracle recomputes every cell from the raw
     documents in SQL — an end-to-end check that build+append lost and
     duplicated nothing."""
-    repair_text_index(index_dir)
-    vdir = _ann_version_dir(index_dir)
-    posts = _index_frame(spark, vdir, "postings")
-    stats = _index_frame(spark, vdir, "stats")
+    vdir = indexstore.live_version_dir(index_dir)
+    posts = indexstore.reader(spark, vdir, "postings")
+    stats = indexstore.reader(spark, vdir, "stats")
     acc = posts.agg(
         F.count(F.lit(1)).alias("n_postings"),
         F.countDistinct("term").alias("n_terms"),

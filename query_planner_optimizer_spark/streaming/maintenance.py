@@ -23,6 +23,11 @@ own committed marker. The agg_dir-level ``_last_batch`` file remains
 as a cheap whole-batch fast path and a progress record; correctness
 no longer depends on it.
 
+The exactly-once ``foreachBatch`` runner, :func:`exactly_once_stream`,
+takes the fold as its argument; the BM25 text index's streaming
+maintenance (``textindex.streaming_text_index_maintenance``) runs on it
+too.
+
 Scale: each micro-batch shuffles |batch grain| + |rollup grain| rows —
 delta-bounded, never the fact table; the stream never holds aggregate
 state in memory (the rollup ON DISK is the state), so there is no
@@ -32,9 +37,55 @@ watermark and no state store to size.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
+
+from query_planner_optimizer_spark.operators.indexstore import write_atomic
+
+
+def exactly_once_stream(
+    spark: SparkSession,
+    landing_dir: str,
+    schema: T.StructType | str,
+    checkpoint_dir: str,
+    marker: str,
+    fold: Callable[[DataFrame, int], None],
+    max_files_per_trigger: int | None = None,
+) -> StreamingQuery:
+    """Start (and return) a ``readStream`` over the parquet landing dir
+    whose ``foreachBatch`` calls ``fold(batch_df, batch_id)`` once per
+    batch. ``marker`` records the last folded batch id, written
+    atomically after the fold, so a restart that replays a batch the
+    fold already applied (a crash between the fold and the checkpoint
+    commit) skips it instead of folding it twice. With
+    ``trigger(availableNow=True)`` the run is finite — callers
+    ``awaitTermination`` on the returned query."""
+    def _last() -> int:
+        if not os.path.exists(marker):
+            return -1
+        with open(marker) as f:
+            txt = f.read().strip()
+        return int(txt) if txt else -1
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id <= _last():
+            return  # already folded + recorded: restart replay no-op
+        fold(batch_df, batch_id)
+        write_atomic(marker, str(batch_id))
+
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return (
+        reader.parquet(landing_dir)
+        .writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def streaming_rollup_maintenance(
@@ -45,7 +96,7 @@ def streaming_rollup_maintenance(
     rollups: dict[str, dict],
     schema: T.StructType,
     max_files_per_trigger: int | None = None,
-):
+) -> StreamingQuery:
     """Start (and return) the maintenance stream. Landing files must
     carry the rollup key columns (write them from an augmented frame —
     the derived time columns are ordinary columns on disk). Callers
@@ -54,31 +105,11 @@ def streaming_rollup_maintenance(
     from query_planner_optimizer_spark.prepare import refresh_rollups
 
     os.makedirs(agg_dir, exist_ok=True)
-    marker = os.path.join(agg_dir, "_last_batch")
 
-    def _last() -> int:
-        if os.path.exists(marker):
-            txt = open(marker).read().strip()
-            return int(txt) if txt else -1
-        return -1
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_id <= _last():
-            return  # fast path: whole batch already folded + recorded
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
         refresh_rollups(spark, batch_df, agg_dir, rollups,
                         batch_id=batch_id)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, marker)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(landing_dir)
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return exactly_once_stream(
+        spark, landing_dir, schema, checkpoint_dir,
+        os.path.join(agg_dir, "_last_batch"), fold, max_files_per_trigger)

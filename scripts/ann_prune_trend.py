@@ -69,6 +69,7 @@ def dir_bytes(path: str) -> int:
 def main() -> int:
     from pyspark.sql import functions as F
 
+    from query_planner_optimizer_spark.operators import indexstore
     from query_planner_optimizer_spark.operators import similarity as S
     from query_planner_optimizer_spark.session import get_spark
 
@@ -178,7 +179,7 @@ def main() -> int:
     t0 = time.perf_counter()
     S.build_ivfpq_index(emb3, d_pq, nlist=PRUNE_NLIST)
     pq_build_s = time.perf_counter() - t0
-    vdir = S._ann_version_dir(d_pq)
+    vdir = indexstore.current_version_dir(d_pq)
     codes_path = os.path.join(vdir, "codes")
     codes_bytes = dir_bytes(codes_path)
     print("", flush=True)

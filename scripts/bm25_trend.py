@@ -56,6 +56,7 @@ def dir_bytes(path: str) -> int:
 
 
 def main() -> int:
+    from query_planner_optimizer_spark.operators import indexstore
     from query_planner_optimizer_spark.operators import textindex as tix
     from query_planner_optimizer_spark.operators.relevance import bm25_scores
     from query_planner_optimizer_spark.session import get_spark
@@ -78,7 +79,7 @@ def main() -> int:
         t0 = time.perf_counter()
         tix.build_text_index(docs, d)
         build_s = time.perf_counter() - t0
-        vdir = tix._ann_version_dir(d)
+        vdir = indexstore.current_version_dir(d)
         posts_path = os.path.join(vdir, "postings")
         total_bytes = dir_bytes(posts_path)
 

@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from query_planner_optimizer_spark.operators import incremental as inc
+from query_planner_optimizer_spark.operators import indexstore
 from query_planner_optimizer_spark.operators.dedup import minhash_lsh_pairs
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -295,6 +296,62 @@ def test_ann_append_freezes_centroids_and_adds_postings(spark, emb):
     assert posts.select("id").distinct().count() == n_after
 
 
+def _tear_append(vdir: str, dataset: str) -> None:
+    """Crash state of an ANN/IVF-PQ append: its one pending marker is
+    written and exactly one of its files is already published."""
+    import json as _json
+
+    markers = [f for f in os.listdir(vdir) if f.startswith("_pending_")]
+    assert len(markers) == 1
+    with open(os.path.join(vdir, markers[0])) as f:
+        plan = _json.load(f)
+    rel = plan["files"][dataset][0]
+    dst = os.path.join(vdir, dataset, rel)
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    os.rename(os.path.join(vdir, plan["staging"], dataset, rel), dst)
+
+
+def test_ann_and_ivfpq_torn_append_heals_on_next_probe(
+        spark, emb, monkeypatch):
+    """ANN and IVF-PQ appends are staged: a crash after the marker
+    write, mid-publish, never serves a partial shard — the next full
+    probe completes the publish and equals brute force over
+    corpus ∪ shard."""
+    from query_planner_optimizer_spark.operators import similarity as S
+
+    corpus = emb.filter(F.col("vec_id") % 8 != 0)
+    shard = emb.filter(F.col("vec_id") % 8 == 0)
+    qs = emb.filter(F.col("vec_id") < 20)
+    want = sorted(map(tuple, S.cosine_topk(emb, num_queries=20).collect()))
+
+    d = tempfile.mkdtemp(prefix="qpo_ann_torn_")
+    S.build_ann_index(corpus, d)
+    monkeypatch.setattr(indexstore, "repair", lambda _root: None)
+    S.append_to_ann_index(spark, shard, d)
+    monkeypatch.undo()
+    vdir = indexstore.current_version_dir(d)
+    _tear_append(vdir, "postings")
+    got = sorted(map(tuple, S.ann_index_topk(
+        spark, qs, d, nprobe=S.IVF_NLIST).collect()))
+    assert not [f for f in os.listdir(vdir)
+                if f.startswith(("_pending_", "_staging_"))]
+    assert got == want and len(got) > 0
+
+    d2 = tempfile.mkdtemp(prefix="qpo_ivfpq_torn_")
+    S.build_ivfpq_index(corpus, d2)
+    monkeypatch.setattr(indexstore, "repair", lambda _root: None)
+    S.append_to_ivfpq_index(spark, shard, d2)
+    monkeypatch.undo()
+    vdir2 = indexstore.current_version_dir(d2)
+    _tear_append(vdir2, "codes")
+    got2 = sorted(map(tuple, S.ivfpq_index_topk(
+        spark, qs, d2, source=emb, nprobe=S.IVF_NLIST,
+        shortlist=1 << 40).collect()))
+    assert not [f for f in os.listdir(vdir2)
+                if f.startswith(("_pending_", "_staging_"))]
+    assert got2 == want
+
+
 def test_ann_partial_probe_is_subset_quality(spark, emb):
     """nprobe < nlist returns k rows per query whose sims are bounded
     by the full-probe (exact) result — structure sanity for the pruned
@@ -473,7 +530,7 @@ def test_torn_append_is_repaired_on_next_touch(spark, docs, monkeypatch):
     d = tempfile.mkdtemp(prefix="qpo_incr_torn_")
     inc.build_dedup_index(corpus, d)
     # Simulate the crash: stage + marker, but suppress the publish.
-    monkeypatch.setattr(inc, "repair_index", lambda _d: None)
+    monkeypatch.setattr(indexstore, "repair", lambda _d: None)
     inc.append_shard_to_index(s1, d)
     monkeypatch.undo()
     markers = [f for f in os.listdir(d) if f.startswith("_pending_")]
@@ -622,22 +679,18 @@ def test_streaming_daily_ingest_foreachbatch_equals_sequential(
     assert len(want1) > 0 and len(want2) > 0
 
 
-def test_ann_retrain_keep_versions_defers_deletion(spark, emb):
-    """keep_versions=2 retains the superseded version dir after the
-    pointer flip (deferred deletion for in-flight readers); the live
-    paths resolve to the NEW version and old files remain readable."""
+def test_ann_retrain_publishes_new_version_and_drops_old(spark, emb):
+    """A retrain publishes a NEW version (the live paths resolve to it)
+    and the superseded version dir is removed right after the flip."""
     from query_planner_optimizer_spark.operators import similarity as S
 
     d = tempfile.mkdtemp(prefix="qpo_ann_keepv_")
     S.build_ann_index(emb.filter(F.col("vec_id") % 8 != 0), d)
     cents0, posts0 = S.ann_paths(d)
-    S.retrain_ann_index(spark, d, keep_versions=2)
+    S.retrain_ann_index(spark, d)
     cents1, posts1 = S.ann_paths(d)
     assert posts1 != posts0
-    assert os.path.exists(posts0)      # superseded version retained
-    assert spark.read.parquet(posts0).count() > 0  # still readable
-    # a second retrain with the default policy prunes down to live only
-    S.retrain_ann_index(spark, d)
+    assert spark.read.parquet(posts1).count() > 0
     versions = [n for n in os.listdir(d) if n.startswith("v_")]
     assert len(versions) == 1
 
@@ -674,14 +727,14 @@ def test_ivfpq_index_append_frozen_and_small(spark, emb):
     shard = emb.filter(F.col("vec_id") % 8 == 0)
     d = tempfile.mkdtemp(prefix="qpo_ivfpq_append_")
     S.build_ivfpq_index(corpus, d)
-    vdir = S._ann_version_dir(d)
+    vdir = indexstore.current_version_dir(d)
     books0 = sorted(map(tuple, spark.read.parquet(
         os.path.join(vdir, "books")).collect()))
     cents0 = sorted(map(tuple, spark.read.parquet(
         os.path.join(vdir, "centroids")).select("cell", "c_norm").collect()))
     n0 = spark.read.parquet(os.path.join(vdir, "codes")).count()
     S.append_to_ivfpq_index(spark, shard, d)
-    assert S._ann_version_dir(d) == vdir          # same version
+    assert indexstore.current_version_dir(d) == vdir  # same version
     books1 = sorted(map(tuple, spark.read.parquet(
         os.path.join(vdir, "books")).collect()))
     cents1 = sorted(map(tuple, spark.read.parquet(
@@ -736,13 +789,13 @@ def test_staging_gc_respects_grace_period(spark, docs):
     inc.build_dedup_index(corpus, d)
     young = os.path.join(d, "_staging_young")
     os.makedirs(os.path.join(young, "bands"))
-    inc.repair_index(d)
+    indexstore.repair(d)
     assert os.path.isdir(young)  # inside the grace window: untouched
-    old_age = inc.STAGING_GC_GRACE_SECONDS + 60
+    old_age = indexstore.STAGING_GC_GRACE_SECONDS + 60
     import time
     past = time.time() - old_age
     os.utime(young, (past, past))
-    inc.repair_index(d)
+    indexstore.repair(d)
     assert not os.path.exists(young)  # aged out: pre-marker garbage
 
 
@@ -770,19 +823,18 @@ def test_append_param_mismatch_raises(spark, docs):
 
 def test_ivfpq_meta_commits_inside_version_dir(spark, emb):
     """META.json lives in the version dir and flips with CURRENT: a
-    geometry-changing rebuild can never pair new meta with old codes.
-    Legacy top-level META still resolves (fallback)."""
+    geometry-changing rebuild can never pair new meta with old codes."""
     from query_planner_optimizer_spark.operators import similarity as S
 
     d = tempfile.mkdtemp(prefix="qpo_ivfpq_meta_")
     S.build_ivfpq_index(emb, d, m=8)
-    vdir = S._ann_version_dir(d)
+    vdir = indexstore.current_version_dir(d)
     assert os.path.exists(os.path.join(vdir, "META.json"))
     assert not os.path.exists(os.path.join(d, "META.json"))
     assert S._load_ivfpq_meta(d)["m"] == 8
     # geometry-changing rebuild: meta follows the flip atomically
     S.build_ivfpq_index(emb, d, m=4)
-    vdir2 = S._ann_version_dir(d)
+    vdir2 = indexstore.current_version_dir(d)
     assert vdir2 != vdir
     assert S._load_ivfpq_meta(d)["m"] == 4
     got = S.ivfpq_index_topk(
@@ -791,27 +843,21 @@ def test_ivfpq_meta_commits_inside_version_dir(spark, emb):
     want = S.cosine_topk(emb, num_queries=10)
     assert sorted(map(tuple, got.collect())) == \
         sorted(map(tuple, want.collect()))
-    # legacy fallback: a pre-r15 index with top-level META only
-    os.rename(os.path.join(vdir2, "META.json"),
-              os.path.join(d, "META.json"))
-    assert S._load_ivfpq_meta(d)["m"] == 4
 
 
-def test_ivfpq_build_keep_versions_defers_deletion(spark, emb):
-    """keep_versions on build_ivfpq_index: a rebuild with
-    keep_versions=2 retains the superseded version (and its META) for
-    in-flight readers; default rebuild prunes to live-only."""
+def test_ivfpq_rebuild_publishes_new_version_and_drops_old(spark, emb):
+    """A rebuild of build_ivfpq_index publishes a NEW version (with its
+    META) and removes the superseded one right after the flip."""
     from query_planner_optimizer_spark.operators import similarity as S
 
     d = tempfile.mkdtemp(prefix="qpo_ivfpq_keepv_")
     S.build_ivfpq_index(emb, d)
-    vdir0 = S._ann_version_dir(d)
-    S.build_ivfpq_index(emb, d, keep_versions=2)
-    vdir1 = S._ann_version_dir(d)
+    vdir0 = indexstore.current_version_dir(d)
+    S.build_ivfpq_index(emb, d)
+    vdir1 = indexstore.current_version_dir(d)
     assert vdir1 != vdir0
-    assert os.path.exists(os.path.join(vdir0, "META.json"))
-    assert spark.read.parquet(os.path.join(vdir0, "codes")).count() > 0
-    S.build_ivfpq_index(emb, d)  # default: prune to live only
+    assert os.path.exists(os.path.join(vdir1, "META.json"))
+    assert spark.read.parquet(os.path.join(vdir1, "codes")).count() > 0
     versions = [n for n in os.listdir(d) if n.startswith("v_")]
     assert len(versions) == 1
 

@@ -4,12 +4,21 @@ hand-rolled pruning, so prove it actually happens)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from query_planner_optimizer_spark.dsl.compiler import compile_query
 from query_planner_optimizer_spark.functions.skew import salted_groupby_agg
 
 from .conftest import SF_DIR, normalize
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _testdata_views(catalog):
+    """Other modules sharing the session (the prepare and CLI tests)
+    register their own ``events`` view; point every view back at the
+    testdata before this module's ``spark.sql`` differentials."""
+    catalog.register_all()
 
 
 def _plan(df) -> str:

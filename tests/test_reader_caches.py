@@ -128,9 +128,10 @@ def test_mutation_token_observes_cross_process_append(spark, tmp_path):
     leaves no pending marker behind (the writer's own repair already
     consumed it). The fix is the dir-stat mutation token: simulate the
     foreign publish by renaming a staged part file straight into the
-    live dataset dir, exactly what repair_index's publish step does."""
-    from query_planner_optimizer_spark.operators.incremental import (
-        _index_parquet,
+    live dataset dir, exactly what indexstore.repair's publish step
+    does."""
+    from query_planner_optimizer_spark.operators.indexstore import (
+        reader as _index_parquet,
     )
 
     idx = str(tmp_path / "idx")

@@ -16,6 +16,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from query_planner_optimizer_spark.operators import indexstore
 from query_planner_optimizer_spark.operators import textindex as tix
 from query_planner_optimizer_spark.operators.relevance import bm25_scores
 
@@ -67,7 +68,7 @@ def test_stats_deltas_are_exact_after_append(spark, docs):
     assert row["n_docs"] == want_docs
     assert row["sum_dl"] == want_sum
     # two stats delta rows on disk (build + append), summed at probe
-    vdir = tix._ann_version_dir(d)
+    vdir = indexstore.current_version_dir(d)
     deltas = spark.read.parquet(os.path.join(vdir, "stats"))
     assert deltas.count() == 2
 
@@ -98,11 +99,11 @@ def test_torn_append_heals_on_next_touch(spark, docs, monkeypatch):
     d = tempfile.mkdtemp(prefix="qpo_tix_torn_")
     tix.build_text_index(corpus, d)
     want_before = _rows(tix.bm25_index_scores(spark, d))
-    real_repair = tix.repair_text_index
-    monkeypatch.setattr(tix, "repair_text_index", lambda _d: None)
+    real_repair = indexstore.repair
+    monkeypatch.setattr(indexstore, "repair", lambda _d: None)
     tix.append_to_text_index(spark, shard, d)
     monkeypatch.undo()
-    vdir = tix._ann_version_dir(d)
+    vdir = indexstore.current_version_dir(d)
     markers = [f for f in os.listdir(vdir) if f.startswith("_pending_")]
     assert len(markers) == 1
     # partially publish one postings file by hand (crash mid-publish)
@@ -122,34 +123,69 @@ def test_torn_append_heals_on_next_touch(spark, docs, monkeypatch):
     tix.build_text_index(docs, d_ref)
     assert got == _rows(tix.bm25_index_scores(spark, d_ref))
     assert got != want_before  # the shard really landed
-    assert real_repair is tix.repair_text_index
+    assert real_repair is indexstore.repair
+
+
+def test_cross_process_append_refreshes_cached_postings(
+        spark, docs, monkeypatch):
+    """An append published by ANOTHER process cannot evict this
+    process's reader caches, and when its postings land in existing
+    ``tbucket=`` dirs the ``postings/`` dir keeps its mtime. The next
+    probe must still serve corpus ∪ shard — never new stats (N, avgdl)
+    over the old postings."""
+    from query_planner_optimizer_spark import catalog
+
+    corpus = docs.filter(F.col("doc_id") % 8 != 0)
+    shard = docs.filter(F.col("doc_id") % 8 == 0)
+    d = tempfile.mkdtemp(prefix="qpo_tix_xproc_")
+    tix.build_text_index(corpus, d)
+    before = _rows(tix.bm25_index_scores(spark, d))  # warms the cache
+    posts = os.path.join(indexstore.current_version_dir(d), "postings")
+
+    def buckets():
+        return sorted(b for b in os.listdir(posts)
+                      if b.startswith("tbucket="))
+
+    buckets_before = buckets()
+    # the foreign writer: its publish evicts nothing in this process
+    monkeypatch.setattr(catalog, "invalidate_reader_caches",
+                        lambda *_a, **_k: None)
+    tix.append_to_text_index(spark, shard, d)
+    monkeypatch.undo()
+    assert buckets() == buckets_before  # no new tbucket= dir
+    got = _rows(tix.bm25_index_scores(spark, d))
+    d_ref = tempfile.mkdtemp(prefix="qpo_tix_xproc_ref_")
+    tix.build_text_index(docs, d_ref)
+    assert got == _rows(tix.bm25_index_scores(spark, d_ref))
+    assert got != before
 
 
 def test_staging_gc_respects_grace_period(spark, docs):
     d = tempfile.mkdtemp(prefix="qpo_tix_grace_")
     tix.build_text_index(docs, d)
-    vdir = tix._ann_version_dir(d)
+    vdir = indexstore.current_version_dir(d)
     young = os.path.join(vdir, "_staging_young")
     os.makedirs(os.path.join(young, "postings"))
-    tix.repair_text_index(d)
+    indexstore.repair(vdir)
     assert os.path.isdir(young)
     import time
 
-    past = time.time() - (tix.STAGING_GC_GRACE_SECONDS + 60)
+    past = time.time() - (indexstore.STAGING_GC_GRACE_SECONDS + 60)
     os.utime(young, (past, past))
-    tix.repair_text_index(d)
+    indexstore.repair(vdir)
     assert not os.path.exists(young)
 
 
 def test_rebuild_flips_atomically_and_topk_shape(spark, docs):
     d = tempfile.mkdtemp(prefix="qpo_tix_flip_")
     tix.build_text_index(docs, d, n_buckets=4)
-    vdir0 = tix._ann_version_dir(d)
+    vdir0 = indexstore.current_version_dir(d)
     assert tix._load_text_meta(d)["n_buckets"] == 4
-    tix.build_text_index(docs, d, n_buckets=8, keep_versions=2)
-    vdir1 = tix._ann_version_dir(d)
+    tix.build_text_index(docs, d, n_buckets=8)
+    vdir1 = indexstore.current_version_dir(d)
     assert vdir1 != vdir0 and tix._load_text_meta(d)["n_buckets"] == 8
-    assert os.path.exists(vdir0)  # deferred deletion for readers
+    assert [n for n in os.listdir(d) if n.startswith("v_")] == [
+        os.path.basename(vdir1)]  # superseded version dropped
     topk = tix.bm25_index_topk(spark, d, k=10)
     rows = topk.collect()
     assert len(rows) == 10
@@ -195,12 +231,12 @@ def test_streaming_maintenance_equals_rebuild(spark, docs, tmp_path):
     assert got == _rows(tix.bm25_index_scores(spark, d_full))
     # restart with no new files: nothing re-appends
     n_stats = spark.read.parquet(
-        os.path.join(tix._ann_version_dir(d), "stats")).count()
+        os.path.join(indexstore.current_version_dir(d), "stats")).count()
     q2 = tix.streaming_text_index_maintenance(spark, landing, d, ckpt,
                                               schema)
     q2.awaitTermination()
     assert spark.read.parquet(
-        os.path.join(tix._ann_version_dir(d), "stats")).count() == n_stats
+        os.path.join(indexstore.current_version_dir(d), "stats")).count() == n_stats
     assert _rows(tix.bm25_index_scores(spark, d)) == got
     # crash-window replay: marker says folded, checkpoint does not —
     # wipe the checkpoint so Spark replays batch 0; the marker must
@@ -225,9 +261,9 @@ def test_compact_text_index_identical_and_one_file_per_bucket(spark, docs):
             spark, docs.filter(gen == g), d)
     want = _rows(tix.bm25_index_scores(spark, d))
     want_tfidf = _rows(tix.tfidf_index_scores(spark, d))
-    vdir_old = tix._ann_version_dir(d)
+    vdir_old = indexstore.current_version_dir(d)
     tix.compact_text_index(spark, d)
-    vdir_new = tix._ann_version_dir(d)
+    vdir_new = indexstore.current_version_dir(d)
     assert vdir_new != vdir_old and not os.path.exists(vdir_old)
     assert _rows(tix.bm25_index_scores(spark, d)) == want
     assert _rows(tix.tfidf_index_scores(spark, d)) == want_tfidf
